@@ -6,8 +6,8 @@ package graft
   * clusterings, the incremental-LP fact/graph stage, the ANN index
   * fixtures. A deployment materializes these in the pipeline that lands
   * the fact table, not per query; in the bench they are built exactly
-  * once per (dir, content fingerprint) by whichever key touches them
-  * first. Bench drains this meter around every key (warmup included) and
+  * once per (dir, name/mtime/size fingerprint) by whichever key touches
+  * them first. Bench drains this meter around every key (warmup included) and
   * records the split per key as `artifact_staging_sec`, so a key that
   * happens to first-touch an expensive artifact is ATTRIBUTABLE instead
   * of just looking slow — the asymmetry that left r13's sf2 triangles

@@ -9,8 +9,10 @@ import graft.functions.Scalars._
 /** The reference's core transform: nested Monday.com GraphQL JSON → 5 typed
   * relational tables (SURVEY.md §2.2; ref `monday_etl_automated.py:238-560`).
   *
-  * Spark-first design: the documents load once with an explicit schema (the
-  * embedded `value` JSON stays an opaque string), `explode` walks
+  * Spark-first design: each table parses its board's documents with an
+  * explicit schema pruned to the fields its columns read (`docSchema`
+  * narrowed per table; the embedded `value` JSON stays an opaque string), a
+  * board's page files scan in one task per split, `explode` walks
   * boards→items→subitems, and each output column is a declarative
   * filter-first-nonempty over the `column_values` array — the per-column
   * dispatch maps of the reference become `Map[String, Column => Column]`
@@ -61,21 +63,61 @@ object Flatten {
     StructField("data", StructType(Seq(
       StructField("boards", ArrayType(board)))))))
 
+  /** `docSchema` narrowed to the given item fields (dotted paths below
+    * `items`; arrays are transparent). The parser skips every other field,
+    * so a table's generated code covers only what its columns read, and a
+    * malformed value in a field it never reads cannot null its rows. */
+  private def itemsSchema(paths: String*): StructType = {
+    def keep(t: DataType, ps: Seq[List[String]]): DataType = t match {
+      case st: StructType => StructType(st.fields.flatMap { f =>
+        val rest = ps.collect { case h :: r if h == f.name => r }
+        if (rest.isEmpty) None
+        else if (rest.contains(Nil)) Some(f)
+        else Some(f.copy(dataType = keep(f.dataType, rest)))
+      })
+      case ArrayType(e, nulls) => ArrayType(keep(e, ps), nulls)
+      case leaf => leaf
+    }
+    val below = "data.boards.items_page.items".split('.').toList
+    keep(docSchema, paths.map(below ++ _.split('.'))).asInstanceOf[StructType]
+  }
+  private val itemHeader = Seq("id", "name", "created_at", "updated_at")
+  private val projectsSchema = itemsSchema(
+    itemHeader ++ Seq("column_values.id", "column_values.text"): _*)
+  private val subitemsSchema = itemsSchema("id" +: (itemHeader ++ Seq(
+    "column_values.text", "column_values.column.type")).map("subitems." + _): _*)
+  private val costsSchema = itemsSchema(itemHeader ++ Seq(
+    "column_values.id", "column_values.text", "column_values.value"): _*)
+
   /** Read one board's snapshot documents (one file per snapshot date, or per
     * page: `<date>[_pN].json`); extraction_date derives from the filename —
     * the run-date stamp of the reference (`monday_etl_automated.py:52-53`),
-    * made deterministic. */
-  def readBoard(s: SparkSession, boardDir: String): DataFrame =
-    s.read.option("multiLine", "true").schema(docSchema)
-      .json(boardDir)
-      .withColumn("extraction_date",
+    * made deterministic.
+    *
+    * Each small page file would otherwise be its own task, and every write
+    * downstream inherits that count; the board coalesces (no shuffle) to
+    * `ceil(bytes / spark.sql.files.maxPartitionBytes)` partitions, `bytes`
+    * being the scan relation's own estimate from its file listing. The
+    * stamp is taken below the coalesce, while each row's file is current. */
+  private def readBoard(s: SparkSession, boardDir: String,
+      schema: StructType): DataFrame = {
+    val raw = s.read.option("multiLine", "true").schema(schema).json(boardDir)
+    val bytes = raw.queryExecution.analyzed.stats.sizeInBytes
+    val split = BigInt(s.sessionState.conf.filesMaxPartitionBytes)
+    raw.withColumn("extraction_date",
         to_date(regexp_extract(input_file_name(), "(\\d{4}-\\d{2}-\\d{2})", 1)))
       .withColumn("extraction_timestamp",
         col("extraction_date").cast("timestamp"))
+      .coalesce(((bytes + split - 1) / split).max(1).toInt)
+  }
 
-  /** boards → items, carrying the snapshot stamp. */
+  /** boards → items, carrying the snapshot stamp (the full `docSchema`). */
   def items(s: SparkSession, boardDir: String): DataFrame =
-    readBoard(s, boardDir)
+    items(s, boardDir, docSchema)
+
+  private def items(s: SparkSession, boardDir: String,
+      schema: StructType): DataFrame =
+    readBoard(s, boardDir, schema)
       .select(col("extraction_date"), col("extraction_timestamp"),
         explode(col("data.boards")).as("board"))
       .select(col("extraction_date"), col("extraction_timestamp"),
@@ -139,7 +181,7 @@ object Flatten {
 
   // ---- flatten_projects (ref `monday_etl_automated.py:238-279`) ------------
   def projects(s: SparkSession, dir: String = fixtureRoot): DataFrame =
-    items(s, s"${dir}/projects")
+    items(s, s"${dir}/projects", projectsSchema)
       .select(Seq(
         col("item.id").as("project_id"), col("item.name").as("project_name"),
         cvText(cvs, "person").as("po"),
@@ -157,7 +199,7 @@ object Flatten {
   // The explode carries the parent id: the parent-child join is materialized
   // at flatten time, exactly like the reference — and with zero shuffle.
   def subitems(s: SparkSession, dir: String = fixtureRoot): DataFrame = {
-    val exploded = items(s, s"${dir}/projects")
+    val exploded = items(s, s"${dir}/projects", subitemsSchema)
       .select(col("extraction_date"), col("extraction_timestamp"),
         col("item.id").as("project_id"), explode(col("item.subitems")).as("sub"))
     val scvs = col("sub.column_values")
@@ -177,7 +219,7 @@ object Flatten {
 
   // ---- flatten_personnel (ref `monday_etl_automated.py:335-402`) -----------
   def personnel(s: SparkSession, dir: String = fixtureRoot): DataFrame =
-    items(s, s"${dir}/personnel")
+    items(s, s"${dir}/personnel", costsSchema)
       .select(Seq(
         col("item.id").as("cost_id"), col("item.name").as("cost_name"),
         cvText(cvs, "person").as("person"),
@@ -189,7 +231,7 @@ object Flatten {
 
   // ---- flatten_travel (ref `monday_etl_automated.py:404-482`) --------------
   def travel(s: SparkSession, dir: String = fixtureRoot): DataFrame =
-    items(s, s"${dir}/travel")
+    items(s, s"${dir}/travel", costsSchema)
       .select(Seq(
         col("item.id").as("cost_id"), col("item.name").as("cost_name"),
         cvText(cvs, "person").as("person"),
@@ -204,7 +246,7 @@ object Flatten {
 
   // ---- flatten_suppliers (ref `monday_etl_automated.py:484-560`) -----------
   def suppliers(s: SparkSession, dir: String = fixtureRoot): DataFrame =
-    items(s, s"${dir}/suppliers")
+    items(s, s"${dir}/suppliers", costsSchema)
       .select(Seq(
         col("item.id").as("cost_id"), col("item.name").as("cost_name"),
         castFloatZero(cvText(cvs, "numbers")).as("imponibile"),

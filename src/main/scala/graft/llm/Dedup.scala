@@ -199,16 +199,17 @@ object Dedup {
     * and through it the pretrain export) consumed the identical
     * (id_a, id_b, inter, uni) relation and each re-ran the full
     * shingle → minhash → band-join → verify chain per invocation. The
-    * artifact is a pure function of the corpus (content-fingerprint
-    * keyed, rebuilt every cold JVM), so every consumer still computes
+    * artifact is a pure function of the corpus (keyed by a name/mtime/size
+    * fingerprint, rebuilt every cold JVM), so every consumer still computes
     * from the parquet inputs. Derived/stress corpora (the `…Over`
     * entry points) keep the per-invocation chain. */
   private val lshCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private[llm] def verifiedArtifact(s: SparkSession, dir: String): DataFrame = {
-    // content fingerprint, not bare mtime (the r10 graph-cache lesson)
-    val fp = graft.sink.Sinks.fingerprint(s"$dir/documents.parquet")
+    // relative name + mtime + size fingerprint, not bare mtime (the r10
+    // graph-cache lesson)
+    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/documents.parquet")
     val root = lshCache.computeIfAbsent(s"$dir@$fp", { _ => graft.Staging.timed {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_lsh_").toString

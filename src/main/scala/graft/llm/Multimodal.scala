@@ -402,7 +402,7 @@ object Multimodal {
           val next = b.position() + sz + (sz & 1) // chunks are word-aligned
           id match {
             case "LIST" =>
-              val listType = fourcc() // descend into LISTs
+              fourcc() // descend into LISTs: skip the list type
             case "avih" =>
               b.getInt; b.getInt; b.getInt; b.getInt
               total = b.getInt

@@ -976,8 +976,8 @@ object DataProfile {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   def joinDppPrune(s: SparkSession, dir: String): DataFrame = {
-    // content fingerprint, not bare mtime (r10 ADVICE)
-    val fp = graft.sink.Sinks.fingerprint(s"$dir/orders.parquet")
+    // relative name + mtime + size fingerprint, not bare mtime (r10 ADVICE)
+    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/orders.parquet")
     val base = dppCache.computeIfAbsent(s"$dir@$fp", { _ =>
       val b = s"$dppRoot/${java.util.UUID.randomUUID()}"
       val orders = load(s, dir, "orders")

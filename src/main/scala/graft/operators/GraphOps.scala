@@ -65,15 +65,16 @@ object GraphOps {
     * exactly how a deployment treats a derived graph artifact; (b) parquet
     * scans are immune to block-manager/memory pressure, which made the
     * checkpoint-block topology the bench's swing key three rounds running
-    * (r6-r8). Keyed by the source file's content fingerprint so regenerated
-    * dir can never serve a stale graph within one JVM (the r8 lesson). */
+    * (r6-r8). Keyed by the source's relative-name/mtime/size fingerprint
+    * so a regenerated dir can never serve a stale graph within one JVM
+    * (the r8 lesson). */
   private val graphCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def buildGraph(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    // content fingerprint, not bare mtime (r10 ADVICE)
-    val fp = graft.sink.Sinks.fingerprint(s"$dir/lineitem.parquet")
+    // relative name + mtime + size fingerprint, not bare mtime (r10 ADVICE)
+    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/lineitem.parquet")
     val root = graphCache.computeIfAbsent(s"$dir@$fp", { _ => graft.Staging.timed {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_graph_").toString
@@ -351,8 +352,8 @@ object GraphOps {
     * job to each measured triangles pass. Built once, read from the
     * sidecar file after that. */
   private def orientedArtifact(s: SparkSession, dir: String): (DataFrame, Long) = {
-    // content fingerprint, not bare mtime (r10 ADVICE)
-    val fp = graft.sink.Sinks.fingerprint(s"$dir/lineitem.parquet")
+    // relative name + mtime + size fingerprint, not bare mtime (r10 ADVICE)
+    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/lineitem.parquet")
     val root = triCache.computeIfAbsent(s"$dir@$fp", { _ => graft.Staging.timed {
       import org.apache.spark.sql.expressions.Window
       val tmp = java.nio.file.Files
@@ -482,7 +483,7 @@ object GraphOps {
     * pass (r15) instead of joining two separately-aggregated frames. */
   private def triCorners(
       o: DataFrame, forcePartitioned: Boolean = false,
-      knownEdgeCount: Option[Long] = None): DataFrame = {
+      knownEdgeCount: Option[Long]): DataFrame = {
     // Broadcast path: both wedge legs broadcast the oriented edge set
     // (~20 MB at sf0.1): the wedge intermediate (sum over v of
     // indeg(v)·outdeg(v) rows — 72M at sf0.1, 60× the edge count) then
@@ -1204,14 +1205,14 @@ object GraphOps {
 
   /** Generalized derived-artifact cache (r13 — the orientedArtifact
     * precedent promoted to a helper): one materialized artifact per
-    * (kind, source dir, lineitem content fingerprint), built the first
-    * time any consumer asks, served as a parquet scan after that. The
+    * (kind, source dir, lineitem name/mtime/size fingerprint), built the
+    * first time any consumer asks, served as a parquet scan after that. The
     * strong-tie graph AND the two clusterings derived from it are each
     * re-derived by several keys (mst, label_prop, modularity,
     * cluster_agreement — the last alone used to re-run BOTH consumers'
     * full iterative loops); a deployment computes a derived graph and its
     * blessed clusterings in the pipeline that lands the fact table, not
-    * per query. Keyed by content fingerprint so a regenerated dir can
+    * per query. Keyed by name/mtime/size fingerprint so a regenerated dir can
     * never serve a stale artifact within one JVM; cached frames are
     * DETERMINISTIC functions of the source (LPA's vote tie-break and
     * Borůvka's forest are total-order-unique), so serving the cache is
@@ -1234,7 +1235,7 @@ object GraphOps {
     * so either copy serves) and the loser's directory is deleted. */
   private def derivedArtifact(s: SparkSession, dir: String, kind: String)(
       build: => Seq[(String, DataFrame)]): String = {
-    val fp = graft.sink.Sinks.fingerprint(s"$dir/lineitem.parquet")
+    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/lineitem.parquet")
     val key = s"$kind@$dir@$fp"
     val hit = artifactCache.get(key)
     if (hit != null) return hit
@@ -1439,7 +1440,7 @@ object GraphOps {
     * graph v1 = v1's raw weights (the nightly artifact). Staged once per
     * (dir, fingerprint). */
   private def lpIncrementalStage(s: SparkSession, dir: String): (String, String) = {
-    val fp = graft.sink.Sinks.fingerprint(s"$dir/lineitem.parquet")
+    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/lineitem.parquet")
     lpIncStage.computeIfAbsent(s"$dir@$fp", { _ => graft.Staging.timed {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_lpinc_").toString

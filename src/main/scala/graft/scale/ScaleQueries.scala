@@ -29,14 +29,14 @@ object ScaleQueries {
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   /** Stage orders + lineitem as co-bucketed (8 buckets, same key) catalog
-    * tables, once per (dir, content fingerprint) per session — the write
-    * is the one-time exchange the read path then never pays (the bench's
+    * tables, once per (dir, name/mtime/size fingerprint) per session — the
+    * write is the one-time exchange the read path then never pays (the bench's
     * repeated passes measure the steady state, exactly as a nightly job
     * over an OPTIMIZE'd layout would run). Names are pid/run-unique so a
     * leftover warehouse dir from a previous JVM can never collide. */
   private[scale] def bucketedPair(s: SparkSession, dir: String): (String, String) = {
-    val fp = graft.sink.Sinks.fingerprint(s"$dir/orders.parquet") + "|" +
-      graft.sink.Sinks.fingerprint(s"$dir/lineitem.parquet")
+    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/orders.parquet") + "|" +
+      graft.sink.Sinks.metadataFingerprint(s"$dir/lineitem.parquet")
     // unlike the file-staging caches, this one stages CATALOG tables,
     // which die with their session — key on the session identity too so
     // a second session in the same JVM restages instead of resolving a

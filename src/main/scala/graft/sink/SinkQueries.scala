@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.flatten.{Flatten, FlattenQueries}
+import graft.flatten.Flatten
 
 /** Oracle-checked keys for the sink layer (SURVEY.md §2.1/§2.8).
   *

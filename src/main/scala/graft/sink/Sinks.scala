@@ -62,12 +62,12 @@ object Sinks {
     existed
   }
 
-  /** Content fingerprint for derived-artifact cache keys (r10 ADVICE):
+  /** Metadata fingerprint for derived-artifact cache keys (r10 ADVICE):
     * mtime alone has millisecond granularity and misses in-place rewrites
     * of directory-backed parquet that preserve the root's mtime. Folds
     * (relative name, mtime, size) over the file — or every regular file
     * under a directory — so any regenerated source flips the key. */
-  def fingerprint(path: String): String = {
+  def metadataFingerprint(path: String): String = {
     val p = Paths.get(path)
     def one(f: java.nio.file.Path): Long = {
       val rel = p.relativize(f).toString

@@ -32,9 +32,10 @@ object SourceQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedOnce(key: String, dir: String, srcTable: String)(
       stage: String => Unit): String = {
-    // content fingerprint, not bare mtime (r10 ADVICE): an in-place
-    // rewrite that preserves the path's mtime must still flip the key
-    val fp = graft.sink.Sinks.fingerprint(s"$dir/$srcTable.parquet")
+    // fingerprint of relative name, mtime and size, not bare mtime (r10
+    // ADVICE): an in-place rewrite that preserves the path's mtime must
+    // still flip the key
+    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/$srcTable.parquet")
     stageCache.computeIfAbsent(s"$key@$dir@$fp", { _ =>
       val path = s"${sys.props("java.io.tmpdir")}/graft_$key" +
         s"-${ProcessHandle.current().pid()}-${evoRunId.incrementAndGet()}"

@@ -53,7 +53,7 @@ object SessionStream {
   /** Merge intervals closer than the gap; input in any order. */
   private[streaming] def merge(sessions: List[OpenSession]): List[OpenSession] =
     sessions.sortBy(s => (s.startUs, s.endUs)).foldLeft(List.empty[OpenSession]) {
-      case (acc @ (prev :: rest), s) if s.startUs - prev.endUs <= GapUs =>
+      case (prev :: rest, s) if s.startUs - prev.endUs <= GapUs =>
         OpenSession(prev.startUs, math.max(prev.endUs, s.endUs),
           prev.n + s.n, prev.valueQ + s.valueQ) :: rest
       case (acc, s) => s :: acc

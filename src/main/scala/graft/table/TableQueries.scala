@@ -1492,10 +1492,10 @@ object TableQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The documents corpus as a versioned table, staged at most once per
-    * (dir, content fingerprint) — the artifact a deployment commits in
-    * the pipeline that lands the corpus, not per query. */
+    * (dir, name/mtime/size fingerprint) — the artifact a deployment commits
+    * in the pipeline that lands the corpus, not per query. */
   private[graft] def corpusTable(s: SparkSession, dir: String): String = {
-    val fp = graft.sink.Sinks.fingerprint(s"$dir/documents.parquet")
+    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/documents.parquet")
     corpusRoots.computeIfAbsent(s"$dir@$fp", { _ =>
       val root = freshRoot("corpus")
       val docs = Tables.load(s, dir, "documents")

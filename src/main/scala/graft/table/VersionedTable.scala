@@ -882,7 +882,7 @@ object VersionedTable {
               case Array(c, lo, hi) => FileStats(c, lo.toLong, hi.toLong)
             }.toSeq
             ManifestEntry(parts(1), change = false, stats)
-          case other => throw new IllegalStateException(
+          case _ => throw new IllegalStateException(
             s"corrupt manifest line at $root v$v: '$line'")
         }
       }

@@ -1,5 +1,7 @@
 package graft.flatten
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -103,6 +105,82 @@ class FlattenSpec extends SparkSpec {
   test("flatten plan is shuffle-free (explode + projection only)") {
     val plan = Flatten.subitems(spark).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"flatten must not shuffle:\n$plan")
+  }
+
+  test("a board reads as ceil(bytes / maxPartitionBytes) partitions, rows unchanged") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val board = new java.io.File(s"${Flatten.fixtureRoot}/projects")
+    val files = board.listFiles().filter(_.getName.endsWith(".json"))
+    val bytes = files.map(_.length).sum
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val atDefault = Flatten.projects(spark)
+    assert(atDefault.rdd.getNumPartitions == 1,
+      s"${files.length} page files ($bytes bytes) fit one default split")
+    val split = bytes / 3 + 1  // ceil(bytes / split) = 3 < one split per file
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, split.toString)
+    try {
+      val small = Flatten.projects(spark)
+      assert(small.rdd.getNumPartitions == ((bytes + split - 1) / split).toInt)
+      assert(rows(small) == rows(atDefault))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(Flatten.projects(spark).rdd.getNumPartitions == 1, "split size restored")
+  }
+
+  test("per-date row counts equal the items in that date's page files") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val mapper = new ObjectMapper()
+    // date -> (items, subitems), read from the page files without Spark
+    def expected(board: String): Map[String, (Int, Int)] =
+      new java.io.File(s"${Flatten.fixtureRoot}/$board").listFiles()
+        .filter(_.getName.endsWith(".json")).toSeq
+        .map { f =>
+          val items = mapper.readTree(f).path("data").path("boards")
+            .elements().asScala.flatMap(_.path("items_page").path("items")
+              .elements().asScala).toSeq
+          (f.getName.take(10), (items.size, items.map(_.path("subitems").size).sum))
+        }
+        .groupMapReduce(_._1)(_._2) { case ((a, b), (c, d)) => (a + c, b + d) }
+    def counts(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+      df.groupBy("extraction_date").count().collect()
+        .map(r => r.getDate(0).toString -> r.getLong(1).toInt).toMap
+    val projectPages = expected("projects")
+    assert(projectPages.size == 4 && projectPages.contains("2025-06-27"))
+    assert(counts(Flatten.projects(spark)) == projectPages.map { case (d, (i, _)) => d -> i })
+    assert(counts(Flatten.subitems(spark)) ==
+      projectPages.collect { case (d, (_, n)) if n > 0 => d -> n })
+    for ((board, table) <- Seq("personnel" -> Flatten.personnel(spark),
+        "travel" -> Flatten.travel(spark), "suppliers" -> Flatten.suppliers(spark)))
+      assert(counts(table) == expected(board).map { case (d, (i, _)) => d -> i }, board)
+  }
+
+  test("a type error in a field a table never reads leaves that table's rows intact") {
+    // item-level column_values[].column must be a struct; projects never
+    // reads it, so the number below cannot null the document for projects.
+    // Without partial results a type error anywhere in the parsed schema
+    // nulls the whole record (one record per file here).
+    val key = "spark.sql.json.enablePartialResults"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val dir = java.nio.file.Files.createTempDirectory("flatten-pruned")
+    try {
+      val board = java.nio.file.Files.createDirectories(dir.resolve("projects"))
+      val item = """{"id": "%s", "name": "P%s", "created_at": null,
+        |"updated_at": null, "subitems": [],
+        |"column_values": [{"id": "status1", "text": "Won", "value": null,
+        |"column": 5}]}""".stripMargin
+      java.nio.file.Files.write(board.resolve("2025-07-01.json"),
+        s"""{"data": {"boards": [{"id": "1", "name": "Projects", "items_page":
+           |{"cursor": null, "items": [${item.format("1", "1")},
+           |${item.format("2", "2")}]}}]}}""".stripMargin.getBytes("UTF-8"))
+      val rows = Flatten.projects(spark, dir.toString)
+        .select("project_id", "stato_pipeline").collect()
+        .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+      assert(rows == Seq(("1", "Won"), ("2", "Won")))
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      graft.sink.Sinks.deleteDir(dir.toString)
+    }
   }
 
   test("snapshot dates cover 3 consecutive days plus a gap day") {
