@@ -65,20 +65,10 @@ object GraphOps {
     * exactly how a deployment treats a derived graph artifact; (b) parquet
     * scans are immune to block-manager/memory pressure, which made the
     * checkpoint-block topology the bench's swing key three rounds running
-    * (r6-r8). Keyed by the source's relative-name/mtime/size fingerprint
-    * so a regenerated dir can never serve a stale graph within one JVM
-    * (the r8 lesson). */
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * (r6-r8). */
   private def buildGraph(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    // relative name + mtime + size fingerprint, not bare mtime (r10 ADVICE)
-    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/lineitem.parquet")
-    val root = graphCache.computeIfAbsent(s"$dir@$fp", { _ => graft.Staging.timed {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_graph_").toString
-      sys.addShutdownHook(graft.sink.Sinks.deleteDir(tmp))
+    val root = graft.Artifacts.derive("graph", s"$dir/lineitem.parquet") { tmp =>
       val pairs = load(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
         .distinct()
@@ -89,8 +79,7 @@ object GraphOps {
       pairs.select(col("sk").as("node")).distinct()
         .write.parquet(s"$tmp/nodes")
       edges.unpersist(blocking = false)
-      tmp
-    }})
+    }
     (s.read.parquet(s"$root/edges"), s.read.parquet(s"$root/deg"),
       s.read.parquet(s"$root/nodes"))
   }
@@ -341,7 +330,7 @@ object GraphOps {
     * like the pagerank graph: built once per (source dir, lineitem print),
     * written to temp parquet, served from disk after that — a deployment
     * derives the co-purchase graph in the pipeline that lands lineitem,
-    * not per query (same content-keyed cache rationale as buildGraph above).
+    * not per query (same rationale as buildGraph above).
     * Orientation loses nothing: it is a per-edge relabel of the same
     * undirected edge set, so consumers needing undirected adjacency
     * (graph_jaccard_sim) union both directions back.
@@ -352,13 +341,8 @@ object GraphOps {
     * job to each measured triangles pass. Built once, read from the
     * sidecar file after that. */
   private def orientedArtifact(s: SparkSession, dir: String): (DataFrame, Long) = {
-    // relative name + mtime + size fingerprint, not bare mtime (r10 ADVICE)
-    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/lineitem.parquet")
-    val root = triCache.computeIfAbsent(s"$dir@$fp", { _ => graft.Staging.timed {
+    val root = graft.Artifacts.derive("tri", s"$dir/lineitem.parquet") { tmp =>
       import org.apache.spark.sql.expressions.Window
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_tri_").toString
-      sys.addShutdownHook(graft.sink.Sinks.deleteDir(tmp))
       val pr = load(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
@@ -374,20 +358,11 @@ object GraphOps {
       val n = s.read.parquet(s"$tmp/oriented").count()
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$tmp/edge_count"), n.toString)
-      tmp
-    }})
-    val n = triCountCache.computeIfAbsent(root, { r =>
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$r/edge_count")).trim.toLong
-    })
+    }
+    val n = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$root/edge_count")).trim.toLong
     (s.read.parquet(s"$root/oriented"), n)
   }
-
-  private val triCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private val triCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Degree-oriented per-node triangle counts from a (p1 < p2) distinct
     * undirected edge table — split out so the spec can drive it with a
@@ -589,18 +564,19 @@ object GraphOps {
     // (spec-pinned on a planted graph): tagged 0/1 counters replay the
     // left-join semantics exactly — a node with no triangle sums tc = 0
     // (the old coalesce), a triangle corner always has deg ≥ 2.
-    val fuse = forceShape.getOrElse(
-      knownEdgeCount.getOrElse(o.count()) <= BroadcastEdgeLimit)
+    // one count serves both the shape fork and triCorners' broadcast gate
+    val n = knownEdgeCount.getOrElse(o.count())
+    val fuse = forceShape.getOrElse(n <= BroadcastEdgeLimit)
     val glued = if (fuse) {
       o.select(col("u").as("p"), lit(1L).as("dc"), lit(0L).as("tc"))
         .unionAll(o.select(col("v").as("p"), lit(1L).as("dc"), lit(0L).as("tc")))
-        .unionAll(triCorners(o, knownEdgeCount = knownEdgeCount)
+        .unionAll(triCorners(o, knownEdgeCount = Some(n))
           .select(col("p"), lit(0L).as("dc"), lit(1L).as("tc")))
         .groupBy(col("p"))
         .agg(sum(col("dc")).as("deg"), sum(col("tc")).as("n_triangles"))
         .filter(col("deg") >= 2)
     } else {
-      val tri = triCorners(o, knownEdgeCount = knownEdgeCount)
+      val tri = triCorners(o, knownEdgeCount = Some(n))
         .groupBy(col("p")).agg(count(lit(1)).as("n_triangles"))
       val deg = o.select(col("u").as("p")).unionAll(o.select(col("v").as("p")))
         .groupBy(col("p")).agg(count(lit(1)).as("deg"))
@@ -1203,61 +1179,20 @@ object GraphOps {
     lbl
   }
 
-  /** Generalized derived-artifact cache (r13 — the orientedArtifact
-    * precedent promoted to a helper): one materialized artifact per
-    * (kind, source dir, lineitem name/mtime/size fingerprint), built the
-    * first time any consumer asks, served as a parquet scan after that. The
-    * strong-tie graph AND the two clusterings derived from it are each
-    * re-derived by several keys (mst, label_prop, modularity,
-    * cluster_agreement — the last alone used to re-run BOTH consumers'
-    * full iterative loops); a deployment computes a derived graph and its
-    * blessed clusterings in the pipeline that lands the fact table, not
-    * per query. Keyed by name/mtime/size fingerprint so a regenerated dir can
-    * never serve a stale artifact within one JVM; cached frames are
-    * DETERMINISTIC functions of the source (LPA's vote tie-break and
-    * Borůvka's forest are total-order-unique), so serving the cache is
-    * indistinguishable from recomputing — the oracle still checks every
-    * consumer end-to-end. */
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Root directory holding `build`'s frames (one parquet dir per map
-    * key), built at most once per (kind, dir, fingerprint). `build` is
-    * by-name: a cache hit never constructs the plans.
-    *
-    * The build runs OUTSIDE any map lock: artifact builds NEST (the lpa/
-    * mst builds read the ties artifact, which is itself cached here), and
-    * ConcurrentHashMap forbids mutating the map from inside a
-    * computeIfAbsent mapping function — whenever two keys land in one bin
-    * the nested insert throws IllegalStateException("Recursive update"),
-    * a data-dependent crash. get → build → putIfAbsent has no such
-    * constraint; a lost race builds twice (the frames are deterministic,
-    * so either copy serves) and the loser's directory is deleted. */
-  private def derivedArtifact(s: SparkSession, dir: String, kind: String)(
-      build: => Seq[(String, DataFrame)]): String = {
-    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/lineitem.parquet")
-    val key = s"$kind@$dir@$fp"
-    val hit = artifactCache.get(key)
-    if (hit != null) return hit
-    val tmp = graft.Staging.timed {
-      val t = java.nio.file.Files
-        .createTempDirectory(s"graft_${kind}_").toString
-      sys.addShutdownHook(graft.sink.Sinks.deleteDir(t))
-      build.foreach { case (name, df) => df.write.parquet(s"$t/$name") }
-      t
-    }
-    val prev = artifactCache.putIfAbsent(key, tmp)
-    if (prev != null) { graft.sink.Sinks.deleteDir(tmp); prev } else tmp
-  }
-
   /** The strong-tie weighted parts graph shared by graph_label_prop,
     * graph_mst, graph_modularity and graph_cluster_agreement: co-purchase
     * pairs weighted by distinct shared orders, thresholded to repeated
     * co-occurrence. Symmetric directed (src, dst, w); a derived artifact
     * (built once per dir, parquet-served) because every consumer iterates
-    * over it. */
+    * over it. The strong-tie graph AND the two clusterings derived from it
+    * are each re-derived by several keys (mst, label_prop, modularity,
+    * cluster_agreement — the last alone used to re-run BOTH consumers'
+    * full iterative loops). The served frames are DETERMINISTIC functions
+    * of the source (LPA's vote tie-break and Borůvka's forest are
+    * total-order-unique), so serving them is indistinguishable from
+    * recomputing — the oracle still checks every consumer end-to-end. */
   private[operators] def strongTieEdges(s: SparkSession, dir: String): DataFrame = {
-    val root = derivedArtifact(s, dir, "ties") {
+    val root = graft.Artifacts.derive("ties", s"$dir/lineitem.parquet") { r =>
       val pr = load(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
@@ -1272,7 +1207,7 @@ object GraphOps {
         .groupBy(col("a.pk").as("src"), col("b.pk").as("dst"))
         .agg(count(lit(1)).as("w"))
         .filter(col("w") >= LpaMinWeight)
-      Seq("edges" -> edges)
+      edges.write.parquet(s"$r/edges")
     }
     s.read.parquet(s"$root/edges")
   }
@@ -1281,8 +1216,8 @@ object GraphOps {
     * label_prop, modularity and cluster_agreement all consume the SAME
     * deterministic labelling, so the iterative loop runs once per dir. */
   private[operators] def lpaTieLabels(s: SparkSession, dir: String): DataFrame = {
-    val root = derivedArtifact(s, dir, "lpa") {
-      Seq("lbl" -> lpaLabels(strongTieEdges(s, dir)))
+    val root = graft.Artifacts.derive("lpa", s"$dir/lineitem.parquet") { r =>
+      lpaLabels(strongTieEdges(s, dir)).write.parquet(s"$r/lbl")
     }
     s.read.parquet(s"$root/lbl")
   }
@@ -1292,9 +1227,10 @@ object GraphOps {
     * the loop's output instead of each re-running it. */
   private[operators] def mstTieArtifact(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val root = derivedArtifact(s, dir, "mst") {
+    val root = graft.Artifacts.derive("mst", s"$dir/lineitem.parquet") { r =>
       val (lbl, forest) = boruvka(canonicalStrongTies(s, dir))
-      Seq("lbl" -> lbl, "forest" -> forest)
+      lbl.write.parquet(s"$r/lbl")
+      forest.write.parquet(s"$r/forest")
     }
     (s.read.parquet(s"$root/lbl"), s.read.parquet(s"$root/forest"))
   }
@@ -1416,8 +1352,6 @@ object GraphOps {
   // maintained edges. The oracle is graph_label_prop's EXACT SQL over the
   // raw tables — batch recompute and delta maintenance must be
   // indistinguishable, which is the whole claim.
-  private val lpIncStage =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   /** Raw symmetric co-purchase weights (src, dst, w) of a pair set —
     * strongTieEdges' build WITHOUT the threshold (IVM maintains raw
@@ -1440,13 +1374,8 @@ object GraphOps {
     * graph v1 = v1's raw weights (the nightly artifact). Staged once per
     * (dir, fingerprint). */
   private def lpIncrementalStage(s: SparkSession, dir: String): (String, String) = {
-    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/lineitem.parquet")
-    lpIncStage.computeIfAbsent(s"$dir@$fp", { _ => graft.Staging.timed {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lpinc_").toString
-      sys.addShutdownHook(graft.sink.Sinks.deleteDir(tmp))
+    val root = graft.Artifacts.derive("lpinc", s"$dir/lineitem.parquet") { tmp =>
       val factRoot = s"$tmp/fact"
-      val graphRoot = s"$tmp/graph"
       val pairs = load(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
@@ -1466,9 +1395,9 @@ object GraphOps {
         changes = Some(pairs.filter(late).withColumn("op", lit("I"))),
         statsColumns = Seq("ok"))
       VersionedTable.commit(
-        tieWeightsRaw(VersionedTable.readVersion(s, factRoot, 1)), graphRoot)
-      (factRoot, graphRoot)
-    }})
+        tieWeightsRaw(VersionedTable.readVersion(s, factRoot, 1)), s"$tmp/graph")
+    }
+    (s"$root/fact", s"$root/graph")
   }
 
   /** Signed fold of the changed orders' contributions into the previous

@@ -20,31 +20,13 @@ object SourceQueries {
 
   private val evoRunId = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** One staged fixture per (key, source dir, source fingerprint) — the
-    * joinDppPrune discipline (r9 ADVICE) applied to every source key that
-    * stages a derived copy of a testdata table: repeated invocations in
-    * one session (the bench runs each key 3-5×) reuse the staged files
-    * instead of accumulating a fresh copy per call; a shutdown hook on
-    * each staged root is the backstop. Staging is fixture PREP for these
-    * keys — the contract under test is the read/parse path, which runs
-    * fresh every invocation either way. */
-  private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stagedOnce(key: String, dir: String, srcTable: String)(
-      stage: String => Unit): String = {
-    // fingerprint of relative name, mtime and size, not bare mtime (r10
-    // ADVICE): an in-place rewrite that preserves the path's mtime must
-    // still flip the key
-    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/$srcTable.parquet")
-    stageCache.computeIfAbsent(s"$key@$dir@$fp", { _ =>
-      val path = s"${sys.props("java.io.tmpdir")}/graft_$key" +
-        s"-${ProcessHandle.current().pid()}-${evoRunId.incrementAndGet()}"
-      graft.sink.Sinks.deleteDir(path)
-      sys.addShutdownHook(graft.sink.Sinks.deleteDir(path))
-      stage(path)
-      path
-    })
-  }
+  // Keys that stage a derived copy of a testdata table stage it once per
+  // (key, source table) through `Artifacts.derive`: repeated invocations
+  // in one session (the bench runs each key 3-5×) reuse the staged files
+  // instead of accumulating a fresh copy per call (the joinDppPrune
+  // discipline, r9 ADVICE). Staging is fixture PREP for these keys — the
+  // contract under test is the read/parse path, which runs fresh every
+  // invocation either way.
 
   private def root = Flatten.fixtureRoot
   private def readFile(p: String): String =
@@ -157,10 +139,10 @@ object SourceQueries {
   // metadata, not data); the oracle states the union + null-fill
   // relationally.
   def srcSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    // pid + counter path inside stagedOnce keeps concurrent sessions on
-    // one host from deleting each other's staged batches
+    // the pid-scoped Artifacts root keeps concurrent sessions on one host
+    // from deleting each other's staged batches
     val docs = graft.model.Tables.load(s, dir, "documents")
-    val path = stagedOnce("src_evo", dir, "documents") { p =>
+    val path = graft.Artifacts.derive("src_evo", s"$dir/documents.parquet") { p =>
       docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("source"))
         .write.parquet(s"$p/v1")
       docs.filter(col("doc_id") % 2 === 1)
@@ -198,7 +180,7 @@ object SourceQueries {
   // parquet.
   def srcJsonl(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.model.Tables.load(s, dir, "documents")
-    val path = stagedOnce("src_jsonl", dir, "documents") { p =>
+    val path = graft.Artifacts.derive("src_jsonl", s"$dir/documents.parquet") { p =>
       docs.write.json(s"$p/docs")
     }
     s.read.schema(docs.schema).json(s"$path/docs")
@@ -232,7 +214,7 @@ object SourceQueries {
       .select(col("o_orderkey").as("key"),
         col("o_orderstatus").as("status"), col("o_totalprice").as("total"),
         to_date(col("o_orderdate")).as("odate"), col("o_orderdate").as("ots"))
-    val path = stagedOnce("src_avro", dir, "orders") { p =>
+    val path = graft.Artifacts.derive("src_avro", s"$dir/orders.parquet") { p =>
       AvroIo.write(o.repartition(4), s"$p/orders_avro")
       ()
     }
@@ -276,7 +258,7 @@ object SourceQueries {
   // parquet row groups, so the read parallelizes identically.
   def srcOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.model.Tables.load(s, dir, "documents")
-    val path = stagedOnce("src_orc", dir, "documents") { p =>
+    val path = graft.Artifacts.derive("src_orc", s"$dir/documents.parquet") { p =>
       docs.write.orc(s"$p/docs")
     }
     s.read.schema(docs.schema).orc(s"$path/docs")
@@ -314,21 +296,7 @@ object SourceQueries {
   // co-bucketed). The envelope's value is interop — the feed an
   // operational DB emits lands in this engine without a custom parser.
   def srcCdcEnvelope(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedOnce("src_cdc", dir, "orders") { p =>
-      graft.operators.PipelineOps.mergeChangeset(s, dir)
-        .select(to_json(struct(
-          when(col("op") === "D", lit("d"))
-            .when(col("op") === "U", lit("u"))
-            .otherwise(lit("c")).as("op"),
-          when(col("op").isin("D", "U"),
-            struct(col("key"), col("old_status").as("status"),
-              col("old_total").as("total"))).as("before"),
-          when(col("op").isin("U", "I"),
-            struct(col("key"), col("new_status").as("status"),
-              col("new_total").as("total"))).as("after")))
-          .as("value"))
-        .write.text(s"$p/cdc")
-    }
+    val path = cdcEnvelopeRoot(s, dir)
     val envSchema = "op STRING, " +
       "before STRUCT<key: BIGINT, status: STRING, total: DOUBLE>, " +
       "after STRUCT<key: BIGINT, status: STRING, total: DOUBLE>"
@@ -348,6 +316,25 @@ object SourceQueries {
           .as("total"))
       .orderBy(col("key"))
   }
+
+  /** Root of the staged CDC envelope (`cdc/`, one JSON event per line)
+    * that src_cdc_envelope reads. */
+  private[graft] def cdcEnvelopeRoot(s: SparkSession, dir: String): String =
+    graft.Artifacts.derive("src_cdc", s"$dir/orders.parquet") { p =>
+      graft.operators.PipelineOps.mergeChangeset(s, dir)
+        .select(to_json(struct(
+          when(col("op") === "D", lit("d"))
+            .when(col("op") === "U", lit("u"))
+            .otherwise(lit("c")).as("op"),
+          when(col("op").isin("D", "U"),
+            struct(col("key"), col("old_status").as("status"),
+              col("old_total").as("total"))).as("before"),
+          when(col("op").isin("U", "I"),
+            struct(col("key"), col("new_status").as("status"),
+              col("new_total").as("total"))).as("after")))
+          .as("value"))
+        .write.text(s"$p/cdc")
+    }
 
   private val srcCdcEnvelopeOracle =
     """WITH base AS (
@@ -410,7 +397,7 @@ object SourceQueries {
       expr("CAST(substring(value, 15, 14) AS BIGINT)").as("cents"))
 
   def srcFixedWidth(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedOnce("src_fw", dir, "orders") { p =>
+    val path = graft.Artifacts.derive("src_fw", s"$dir/orders.parquet") { p =>
       fixedWidthRecords(graft.model.Tables.load(s, dir, "orders"))
         .write.text(s"$p/fw")
     }

@@ -1488,24 +1488,18 @@ object TableQueries {
   // groups. Oracle = the plain filter + md5 group count; the strict
   // file-subset claim is spec-pinned (CorpusPointReadSpec) because SQL
   // can't state I/O.
-  private val corpusRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The documents corpus as a versioned table, staged at most once per
-    * (dir, name/mtime/size fingerprint) — the artifact a deployment commits
-    * in the pipeline that lands the corpus, not per query. */
-  private[graft] def corpusTable(s: SparkSession, dir: String): String = {
-    val fp = graft.sink.Sinks.metadataFingerprint(s"$dir/documents.parquet")
-    corpusRoots.computeIfAbsent(s"$dir@$fp", { _ =>
-      val root = freshRoot("corpus")
+    * documents source — the artifact a deployment commits in the pipeline
+    * that lands the corpus, not per query. */
+  private[graft] def corpusTable(s: SparkSession, dir: String): String =
+    graft.Artifacts.derive("corpus", s"$dir/documents.parquet") { root =>
       val docs = Tables.load(s, dir, "documents")
         .repartition(8, col("doc_id")) // unclustered: every file spans the id domain
       VersionedTable.commit(docs, root, changes = None,
         statsColumns = Seq("n_chars"), bloomColumns = Seq("doc_id"),
         ndvColumns = Seq("lang", "source"))
-      root
-    })
-  }
+    }
 
   def tableCorpusPointread(s: SparkSession, dir: String): DataFrame = {
     val root = corpusTable(s, dir)

@@ -52,9 +52,8 @@ class JsonlSpec extends SparkSpec {
         assert(st == "X", s"update lost on key $k")
     }
     // envelope shape: d-events carry only before, c-events only after
-    val path = s"${sys.props("java.io.tmpdir")}"
-    val staged = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("graft_src_cdc-")).maxBy(_.lastModified)
+    // (the key's own staged root: a cache hit, so the same files it read)
+    val staged = SourceQueries.cdcEnvelopeRoot(spark, sfDir)
     val lines = spark.read.textFile(s"$staged/cdc").collect()
     assert(lines.exists(l => l.contains("\"op\":\"d\"") &&
       l.contains("before") && !l.contains("after")))

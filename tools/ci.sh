@@ -36,6 +36,15 @@ if grep -rniE '(artifactory|nexus)\.(infra|corp|internal)\.[a-z]|[a-z0-9-]+\.cor
   echo "LINT FAIL: internal-looking hostname/shortlink in working tree" >&2
   exit 1
 fi
+# One derived-artifact cache: every temp dir in src/main is made by
+# `Artifacts.derive`, which owns the fingerprint key, the superseded-root
+# delete, the pid-scoped namespace and its shutdown hook. A new
+# createTempDirectory elsewhere is a hand-rolled cache growing back.
+if grep -rn 'createTempDirectory' src/main/scala --include='*.scala' \
+    | grep -v '^src/main/scala/graft/Artifacts\.scala:'; then
+  echo "LINT FAIL: createTempDirectory outside graft/Artifacts.scala (derive the artifact through Artifacts.derive)" >&2
+  exit 1
+fi
 # Window-partition lint (r10 VERDICT item 8): a window partitioned by a
 # known low-cardinality column ALONE, or an unpartitioned Window.orderBy,
 # sorts a fact-sized partition in one task at 100x. Legitimate sites
