@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR.
   *
@@ -15,25 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // the generated-class cache defaults to 100 entries — a 147-query
-      // suite evicts everything between passes, so every measured pass
-      // re-compiles (Janino) and re-JITs each key's WholeStageCodegen
-      // classes. That charged complex-plan keys a ~1.3-1.4x "suite
-      // context" tax vs isolated runs (graph_pagerank 3.1s alone /
-      // 4.3s mid-suite, r7 — confirmed by pairing experiments: the key
-      // is fast exactly when it follows itself). Sized for the suite,
-      // as any real many-query deployment would.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     // optional arg: comma-separated key filter for local iteration — the
     // driver's full run passes no args

@@ -14,15 +14,15 @@ import graft.expressions.GraftFunctions
   * and every session (including ones created by notebooks, Thrift server
   * connections, or structured-streaming jobs the operator doesn't control)
   * has `graft_simhash16`, `graft_minhash16`, `graft_dotq`, `graft_l2q`,
-  * `graft_shingle3`, and `graft_nfc` available in SQL text — no per-session
-  * `GraftFunctions.register` call required. Injection happens at session
-  * BUILD time through the extensions hook, the same mechanism Delta/
-  * Iceberg use to install their parsers and rules; the in-process
-  * `GraftFunctions.register` path remains for library callers that own
-  * their session. Both paths bind the ONE builder table
-  * (`GraftFunctions.builders`, arity-gated at analysis time), so a
-  * query's plan — and its error behavior — is byte-identical whichever
-  * way the function arrived.
+  * `graft_shingle3`, and `graft_nfc` available in SQL text. Injection
+  * happens at session BUILD time through the extensions hook, the same
+  * mechanism Delta/Iceberg use to install their parsers and rules;
+  * `graft.Session` installs it on every session this library builds.
+  * SQL text is the only thing that needs it: library code calls the typed
+  * Column functions in `GraftFunctions`, which build the same expression
+  * classes as this hook's table (`GraftFunctions.builders`, arity-gated at
+  * analysis time), so a query's plan is identical whichever way it was
+  * written.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

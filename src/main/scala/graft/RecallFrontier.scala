@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Emits RECALL.json — the ANN recall-vs-cost frontier
   * (graft.llm.Similarity.recallFrontier) at SPARK_GRAFT_SF_DIR: one row
   * per serving family with recall@3 against exact ground truth and the
@@ -13,18 +11,8 @@ import org.apache.spark.sql.SparkSession
 object RecallFrontier {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val out = if (args.nonEmpty) args(0) else "RECALL.json"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     val rows = graft.llm.Similarity.recallFrontier(spark, sfDir).collect()
     val json = rows.map { r =>

@@ -2,7 +2,6 @@ package graft.expressions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -316,14 +315,25 @@ object BloomSupport {
   }
 }
 
-/** Session registration (the SparkSessionExtensions-style hook, applied via
-  * the function registry so any query text can call the functions). */
+/** The graft functions, two ways in. Library code calls the typed Column
+  * functions below, which plant each expression through `ColumnBridge`
+  * and so need nothing installed in the session (a session built without
+  * `GraftExtensions` runs every library key). SQL text gets the
+  * `graft_*` names from `GraftExtensions`, installed at session build,
+  * which binds `builders`. Both paths build the same expression classes,
+  * so a query's analyzed plan is identical whichever way it was written. */
 object GraftFunctions {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
-  /** The ONE builder table both install paths bind — the in-process
-    * `register` below and the `spark.sql.extensions` hook
-    * (GraftExtensions) — so a query's plan is byte-identical whichever
-    * way a function arrived, including its arity errors. */
+  def simhash16(tokens: Column): Column = column(SimHash16(expression(tokens)))
+  def minhash16(shingles: Column): Column = column(MinHash16(expression(shingles)))
+  def shingle3(text: Column): Column = column(Shingle3(expression(text)))
+  def dotq(a: Column, b: Column): Column = column(DotQ(expression(a), expression(b)))
+  def l2q(a: Column, b: Column): Column = column(L2Q(expression(a), expression(b)))
+  def nfc(text: Column): Column = column(NfcNormalize(expression(text)))
+
+  /** The builder table `GraftExtensions` installs for SQL text. */
   val builders: Seq[(String, Int, Seq[Expression] => Expression)] = Seq(
     ("graft_simhash16", 1, exprs => SimHash16(exprs.head)),
     ("graft_minhash16", 1, exprs => MinHash16(exprs.head)),
@@ -332,11 +342,10 @@ object GraftFunctions {
     ("graft_shingle3", 1, exprs => Shingle3(exprs.head)),
     ("graft_nfc", 1, exprs => NfcNormalize(exprs.head)))
 
-  /** Arity gate at analysis time (r10, both paths): a builder that
-    * blindly indexes `exprs` turns a missing argument into a raw
-    * IndexOutOfBoundsException and silently DROPS surplus arguments —
-    * both are analysis errors and must fail as such, naming the
-    * function. */
+  /** Arity gate at analysis time (r10): a builder that blindly indexes
+    * `exprs` turns a missing argument into a raw IndexOutOfBoundsException
+    * and silently DROPS surplus arguments — both are analysis errors and
+    * must fail as such, naming the function. */
   def arityChecked(name: String, n: Int)(
       build: Seq[Expression] => Expression): Seq[Expression] => Expression =
     exprs => {
@@ -349,12 +358,4 @@ object GraftFunctions {
             "docroot" -> "https://spark.apache.org/docs/latest"))
       build(exprs)
     }
-
-  def register(s: SparkSession): Unit = {
-    val r = s.sessionState.functionRegistry
-    builders.foreach { case (name, n, build) =>
-      r.createOrReplaceTempFunction(name, arityChecked(name, n)(build),
-        "built-in")
-    }
-  }
 }

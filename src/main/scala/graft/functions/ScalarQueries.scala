@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expressions.GraftFunctions.nfc
 import graft.model.Tables
 import graft.model.Tables.load
 
@@ -466,7 +467,6 @@ object ScalarQueries {
   // fast path (a UDF here would break the stage around the corpus
   // scan); the rest is one map-side-combining hash agg.
   def fnUnicodeNfc(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     load(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         concat(substring(col("text"), 1, 16), lit("Cafe"),
@@ -474,7 +474,7 @@ object ScalarQueries {
             .when(col("doc_id") % 3 === 0, lit("\u0301"))
             .when(col("doc_id") % 3 === 1, lit("\u0300"))
             .otherwise(lit("\u0308"))).as("raw"))
-      .withColumn("norm", expr("graft_nfc(raw)"))
+      .withColumn("norm", nfc(col("raw")))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("norm") =!= col("raw"), 1L).otherwise(0L))

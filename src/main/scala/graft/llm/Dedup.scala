@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expressions.GraftFunctions.{dotq, minhash16, shingle3, simhash16}
 import graft.model.Tables.load
+import graft.operators.GraphOps.gatedBroadcast
 
 /** Deduplication operators for a training-data pipeline, over `documents`.
   *
@@ -35,15 +37,14 @@ object Dedup {
     * interpreted nested-lambda form was 5.7s of every dedup key at sf0.1.
     * `graft_shingle3` returns [] below 3 tokens, so the size filter keeps
     * exactly the old `len(toks) >= 3` rows. */
-  private[llm] def shingledFrom(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
+  private[llm] def shingledFrom(docs: DataFrame): DataFrame = {
     docs
-      .select(col("doc_id"), expr("graft_shingle3(text)").as("shingles"))
+      .select(col("doc_id"), shingle3(col("text")).as("shingles"))
       .filter(size(col("shingles")) > 0)
   }
 
   private[llm] def shingled(s: SparkSession, dir: String): DataFrame =
-    shingledFrom(s, load(s, dir, "documents"))
+    shingledFrom(load(s, dir, "documents"))
 
   /** The shingle CTE over an arbitrary source table — `table` is swapped to
     * a derived (e.g. skew-stress) corpus CTE by DedupStress. */
@@ -127,7 +128,7 @@ object Dedup {
     minhashPairsFrom(verifiedArtifact(s, dir))
 
   private[llm] def dedupMinhashLshOver(s: SparkSession, docsIn: DataFrame): DataFrame =
-    minhashPairsFrom(lshVerified(s, docsIn))
+    minhashPairsFrom(lshVerified(docsIn))
 
   /** Threshold + report projection over a verified-pair relation. */
   private def minhashPairsFrom(verified: DataFrame): DataFrame =
@@ -204,7 +205,7 @@ object Dedup {
     * corpora (the `…Over` entry points) keep the per-invocation chain. */
   private[llm] def verifiedArtifact(s: SparkSession, dir: String): DataFrame = {
     val root = graft.Artifacts.derive("lsh", s"$dir/documents.parquet") { r =>
-      lshVerified(s, load(s, dir, "documents")).write.parquet(s"$r/verified")
+      lshVerified(load(s, dir, "documents")).write.parquet(s"$r/verified")
     }
     s.read.parquet(s"$root/verified")
   }
@@ -212,8 +213,7 @@ object Dedup {
   /** The banded candidate generation + exact verify, UNFILTERED — the
     * (id_a, id_b, inter, uni) relation the pair key thresholds at J ≥ 0.5
     * and the threshold sweep cuts at every θ. */
-  private def lshVerified(s: SparkSession, docsIn: DataFrame): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
+  private def lshVerified(docsIn: DataFrame): DataFrame = {
     // shingle-set lifecycle (r2 verdict): no session-retained .cache() —
     // that entry outlived every action and at 100 TB pins the full shingle
     // set in executor memory for the whole session. `localCheckpoint`
@@ -230,10 +230,10 @@ object Dedup {
     // or reliable checkpoint survive). That is the right trade for a
     // re-runnable batch dedup pass; a pipeline that must survive executor
     // churn swaps this one call for persist-with-replication.
-    val docs = shingledFrom(s, docsIn).localCheckpoint()
+    val docs = shingledFrom(docsIn).localCheckpoint()
     // native codegen twin of: transform(sequence(0,15), s ->
     //   array_min(transform(shingles, sh -> md5(concat(s, ':', sh)))))
-    val sigs = docs.withColumn("sig", expr("graft_minhash16(shingles)"))
+    val sigs = docs.withColumn("sig", minhash16(col("shingles")))
     val bands = sigs.select(col("doc_id"),
         posexplode(expr(
           "transform(sequence(0,3), b -> md5(concat_ws('', slice(sig, b*4+1, 4))))"))
@@ -313,7 +313,7 @@ object Dedup {
 
   private[llm] def dedupNgramJaccardOver(s: SparkSession, docsIn: DataFrame): DataFrame = {
     // same per-invocation localCheckpoint lifecycle as dedupMinhashLsh
-    val docs = shingledFrom(s, docsIn).localCheckpoint()
+    val docs = shingledFrom(docsIn).localCheckpoint()
     val sh = docs.select(col("doc_id"), explode(col("shingles")).as("sh"))
     // one-row corpus count, broadcast into the df filter — no driver collect
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -370,14 +370,13 @@ object Dedup {
   // of the vote sum over tokens (+1 when the i-th hex digit >= 8). Docs
   // sharing the signature land in one bucket — the dedup-candidate grouping.
   def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     // native codegen twin of the declarative per-bit md5-hex-digit vote
     // (graft.expressions.SimHash16); output is bit-identical
     load(s, dir, "documents")
       .select(col("doc_id"),
         expr(s"array_distinct($toksE)").as("toks"))
       .filter(size(col("toks")) > 0)
-      .select(col("doc_id"), expr("graft_simhash16(toks)").as("simhash"))
+      .select(col("doc_id"), simhash16(col("toks")).as("simhash"))
       .orderBy(col("doc_id"))
   }
 
@@ -418,14 +417,13 @@ object Dedup {
   // exact integer arithmetic, order-independent and identical in both
   // engines; only the final normalize runs in (identical) doubles.
   def dedupEmbeddingCosine(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     // graft_dotq = native exact quantized dot product (see HashExpressions);
     // bit-identical to the declarative zip_with/aggregate the oracle replays
     val emb = load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
     val nRow = emb.agg(count(lit(1)).as("n"))
     val q = emb
-      .withColumn("nrm", expr("graft_dotq(embedding, embedding)"))
+      .withColumn("nrm", dotq(col("embedding"), col("embedding")))
       .crossJoin(broadcast(nRow))
       .withColumn("bits",
         expr("greatest(0, least(8, cast(ceil(log2(n / 2000.0d)) as int)))"))
@@ -439,7 +437,7 @@ object Dedup {
         col("a.label") === col("b.label") && col("a.sb") === col("b.sb") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        expr("graft_dotq(a.embedding, b.embedding)").as("dot"),
+        dotq(col("a.embedding"), col("b.embedding")).as("dot"),
         col("a.nrm").as("na"), col("b.nrm").as("nb"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
@@ -535,9 +533,8 @@ object Dedup {
     // the window partition key skew-safe: the all-NULL fingerprint
     // partition never forms.
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.GraftFunctions.register(s)
     val flagged = docsIn.select(col("doc_id"), md5(col("text")).as("fp"),
-      coalesce(size(expr("graft_shingle3(text)")) > 0, lit(false)).as("has_sh"))
+      coalesce(size(shingle3(col("text"))) > 0, lit(false)).as("has_sh"))
     val repMap = flagged.filter(col("has_sh"))
       .select(col("doc_id"),
         min(col("doc_id")).over(Window.partitionBy(col("fp"))).as("rep"))
@@ -557,21 +554,6 @@ object Dedup {
       .localCheckpoint()
     (repMap, sym)
   }
-
-  /** Broadcast gate for the CC loops' vertex-grain state frames (r15 —
-    * the GraphOps.gatedBroadcast device): the loops' state is
-    * localCheckpointed each round and carries no size statistics, so
-    * without the hint every per-round join ran SortMergeJoin with BOTH
-    * sides shuffled — including the edge relation. The counts that feed
-    * the gate are free: min-label's active-vertex set is loop-invariant
-    * (counted once), large/small-star already counts its edge set every
-    * round for convergence. Past the limit the shuffled plan is kept —
-    * the right shape for a dup-graph whose active vertices are a large
-    * fraction of a huge corpus. */
-  private val CcBroadcastLimit = 2L * 1000 * 1000
-  // decides on upper bounds (nActive, 2 * eCnt): under-selects broadcasts, never over-selects
-  private def gatedBc(df: DataFrame, knownCount: Long): DataFrame =
-    if (knownCount <= CcBroadcastLimit) broadcast(df) else df
 
   /** Min-label propagation to the component-min fixpoint over a symmetric
     * edge set; returns (doc_id, cluster_id) for every active vertex. */
@@ -601,9 +583,9 @@ object Dedup {
       // never exchanged; nbr_min (≤ |active| rows) broadcasts into the
       // left join, so the superstep's only shuffle is the vertex-grain
       // hash-agg
-      val nbrMin = sym.join(gatedBc(labels, nActive), col("dst") === col("doc_id"))
+      val nbrMin = sym.join(gatedBroadcast(labels, nActive), col("dst") === col("doc_id"))
         .groupBy(col("src")).agg(min(col("cluster_id")).as("nbr_min"))
-      val stepOut = labels.join(gatedBc(nbrMin, nActive),
+      val stepOut = labels.join(gatedBroadcast(nbrMin, nActive),
           labels("doc_id") === nbrMin("src"), "left")
         .select(labels("doc_id"), labels("cluster_id").as("old_cluster"),
           least(labels("cluster_id"),
@@ -627,7 +609,7 @@ object Dedup {
   private def reattachMembers(repMap: DataFrame, labels: DataFrame,
       labelBound: Long): DataFrame =
     repMap
-      .join(gatedBc(labels.withColumnRenamed("doc_id", "rep_id"), labelBound),
+      .join(gatedBroadcast(labels.withColumnRenamed("doc_id", "rep_id"), labelBound),
         col("rep") === col("rep_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
@@ -686,7 +668,7 @@ object Dedup {
       // both min-neighbor tables broadcast below the gate, so the edge
       // stream is never exchanged for the joins — each round's shuffles
       // are the two hash-aggs and the two distincts only
-      val ls = symE.join(gatedBc(mL, 2 * eCnt), symE("u") === col("c"))
+      val ls = symE.join(gatedBroadcast(mL, 2 * eCnt), symE("u") === col("c"))
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .distinct()
@@ -694,7 +676,7 @@ object Dedup {
       // neighbor; children {v ≠ m} and u itself re-attach to m — output
       // stays canonical ((v, m): v > m since m is the min; (u, m): u > m).
       val mS = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val stepOut = ls.join(gatedBc(mS, 2 * eCnt), Seq("u"))
+      val stepOut = ls.join(gatedBroadcast(mS, 2 * eCnt), Seq("u"))
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(mS.select(col("u"), col("m").as("v")))
@@ -900,7 +882,7 @@ object Dedup {
     dedupContainmentOver(s, load(s, dir, "documents"))
 
   private[llm] def dedupContainmentOver(s: SparkSession, docsIn: DataFrame): DataFrame = {
-    val docs = shingledFrom(s, docsIn).localCheckpoint()
+    val docs = shingledFrom(docsIn).localCheckpoint()
     val sh = docs.select(col("doc_id"), explode(col("shingles")).as("sh"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val rare = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -983,7 +965,7 @@ object Dedup {
 
   private[llm] def dedupPrefixJoinOver(s: SparkSession, docsIn: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = shingledFrom(s, docsIn).localCheckpoint()
+    val docs = shingledFrom(docsIn).localCheckpoint()
     // shingles become 60-bit md5-prefix integers IMMEDIATELY (the universal
     // PPJoin move): the index joins, the frequency ordering, and above all
     // the verify-side array intersections run on longs instead of ~20-char

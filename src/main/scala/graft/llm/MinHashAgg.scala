@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.expressions.GraftFunctions.minhash16
 import graft.model.Tables.load
 
 /** Typed `Aggregator[IN, BUF, OUT]` for MinHash sketch UNION (SURVEY.md
@@ -50,11 +51,10 @@ object MinHashAgg {
     * graft_minhash16 expression) merged with the Aggregator. The oracle
     * replays the same thing relationally (unnest → per-position MIN). */
   def dedupMinhashUnion(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val docs = load(s, dir, "documents")
     val shingledDocs = Dedup.shingled(s, dir)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .withColumn("sig", expr("graft_minhash16(shingles)"))
+      .withColumn("sig", minhash16(col("shingles")))
     val unionUdaf = udaf(union)
     shingledDocs
       .groupBy(col("source"))

@@ -31,7 +31,7 @@ object PipelinePrep {
   // scan + a map-side hash-semijoin + one hash-agg on doc_id — no shuffle
   // of the corpus text, never a corpus×benchmark shuffle join.
   def curateDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.shingledFrom(s, load(s, dir, "documents"))
+    val sh = Dedup.shingledFrom(load(s, dir, "documents"))
     val bench = sh.filter(col("doc_id") % 37 === 0)
       .select(explode(col("shingles")).as("shingle")).distinct()
     val cand = sh.filter(col("doc_id") % 37 =!= 0)

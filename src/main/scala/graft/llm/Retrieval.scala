@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expressions.GraftFunctions.dotq
 import graft.model.Tables.load
 
 /** Retrieval operators over `documents` + `embeddings` — the serving-side
@@ -145,12 +146,11 @@ object Retrieval {
   // (k rows per query), so cost is the two retrievers, not the fusion —
   // and the dense side swaps to sim_ivfpq unchanged.
   def hybridRrf(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val b = bm25Ranked(s, dir, topN = 20)
       .select(col("query_id"), col("doc_id").as("id"), col("rank").as("bm25_rank"))
     val emb = load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", expr("graft_dotq(embedding, embedding)"))
+      .withColumn("nrm", dotq(col("embedding"), col("embedding")))
     val vq = emb.filter(col("vec_id") < Similarity.AnnQueryCount)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
@@ -158,7 +158,7 @@ object Retrieval {
       .orderBy(col("cos").desc, col("id"))
     val v = emb.join(broadcast(vq), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("id"),
-        expr("graft_dotq(q_emb, embedding)").as("dot"), col("q_nrm"), col("nrm"))
+        dotq(col("q_emb"), col("embedding")).as("dot"), col("q_nrm"), col("nrm"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("q_nrm").cast("double")) * sqrt(col("nrm").cast("double"))))
       .withColumn("vec_rank", row_number().over(wV))
@@ -234,7 +234,6 @@ object Retrieval {
   // prefilter (sim_lsh_ann / sim_ivf_ann produce the candidate set; this
   // operator is the reranker over it) — the plan here IS the rerank plan.
   def retrievalMaxsim(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val tok = load(s, dir, "embeddings")
       .select(expr("vec_id div 8").as("doc"),
         expr("vec_id % 8").as("ti"), col("embedding"))
@@ -244,7 +243,7 @@ object Retrieval {
     val dots = tok.crossJoin(broadcast(qt))
       .filter(col("doc") =!= col("qdoc"))
       .select(col("qdoc"), col("qti"), col("doc"),
-        expr("graft_dotq(qemb, embedding)").as("dot"))
+        dotq(col("qemb"), col("embedding")).as("dot"))
     val best = dots.groupBy(col("qdoc"), col("doc"), col("qti"))
       .agg(max(col("dot")).as("m"))
     val score = best.groupBy(col("qdoc"), col("doc"))
@@ -353,12 +352,11 @@ object Retrieval {
   // exclusion is a broadcast anti-join of two ≤(10×k)-row rank relations,
   // and the slot numbering is a query-grain window over ≤10 rows/query.
   def retrievalHardNegatives(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val b = bm25Ranked(s, dir, topN = 10)
       .select(col("query_id"), col("doc_id"), col("rank").as("bm25_rank"))
     val emb = load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", expr("graft_dotq(embedding, embedding)"))
+      .withColumn("nrm", dotq(col("embedding"), col("embedding")))
     val vq = emb.filter(col("vec_id") < Similarity.AnnQueryCount)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
@@ -366,7 +364,7 @@ object Retrieval {
       .orderBy(col("cos").desc, col("doc_id"))
     val dense = emb.join(broadcast(vq), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("doc_id"),
-        expr("graft_dotq(q_emb, embedding)").as("dot"), col("q_nrm"), col("nrm"))
+        dotq(col("q_emb"), col("embedding")).as("dot"), col("q_nrm"), col("nrm"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("q_nrm").cast("double")) * sqrt(col("nrm").cast("double"))))
       .withColumn("vec_rank", row_number().over(wV))

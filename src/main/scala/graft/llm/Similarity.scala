@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expressions.GraftFunctions.{dotq, l2q}
 import graft.model.Tables.load
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -41,10 +42,9 @@ object Similarity {
     * bit-identical to the declarative quantize/zip_with/aggregate chain the
     * oracle replays). */
   private def quantized(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", expr("graft_dotq(embedding, embedding)"))
+      .withColumn("nrm", dotq(col("embedding"), col("embedding")))
   }
 
   private val quantizedSql =
@@ -65,7 +65,7 @@ object Similarity {
         col("nrm").as("q_nrm"))
     val scored = corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("graft_dotq(q_emb, embedding)").as("dot"),
+        dotq(col("q_emb"), col("embedding")).as("dot"),
         col("q_nrm"), col("nrm"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("q_nrm").cast("double")) * sqrt(col("nrm").cast("double"))))
@@ -218,7 +218,7 @@ object Similarity {
     val scored = corpus.join(broadcast(queries),
         col("bucket") === col("q_bucket") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("graft_dotq(q_emb, embedding)").as("dot"),
+        dotq(col("q_emb"), col("embedding")).as("dot"),
         col("q_nrm"), col("nrm"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("q_nrm").cast("double")) * sqrt(col("nrm").cast("double"))))
@@ -299,7 +299,7 @@ object Similarity {
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
           col("nrm").as("q_nrm"))), "query_id")
       .select(col("query_id"), col("neighbor_id"),
-        expr("graft_dotq(q_emb, embedding)").as("dot"),
+        dotq(col("q_emb"), col("embedding")).as("dot"),
         col("q_nrm"), col("nrm"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("q_nrm").cast("double")) * sqrt(col("nrm").cast("double"))))
@@ -434,7 +434,7 @@ object Similarity {
         col("nrm").as("q_nrm"))
     val scored = corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("graft_dotq(q_emb, embedding)").as("dot"),
+        dotq(col("q_emb"), col("embedding")).as("dot"),
         col("q_nrm"), col("nrm"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("q_nrm").cast("double")) * sqrt(col("nrm").cast("double"))))
@@ -519,12 +519,11 @@ object Similarity {
     * serving path uses. */
   private[llm] def ivfAssignment(s: SparkSession, dir: String, nprobe: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.expressions.GraftFunctions.register(s)
     val base = load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("qv",
         expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6) AS BIGINT))"))
-      .withColumn("nrm", expr("graft_dotq(embedding, embedding)"))
+      .withColumn("nrm", dotq(col("embedding"), col("embedding")))
     // centroids: per-label element-wise truncated mean — k rows, broadcast
     val cent = base
       .select(col("label").as("cell"), posexplode(col("qv")).as(Seq("pos", "v")))
@@ -561,7 +560,7 @@ object Similarity {
       .join(base.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
       .join(broadcast(qvecs), "query_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("graft_dotq(q_emb, embedding)").as("dot"), col("q_nrm"), col("nrm"))
+        dotq(col("q_emb"), col("embedding")).as("dot"), col("q_nrm"), col("nrm"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("q_nrm").cast("double")) * sqrt(col("nrm").cast("double"))))
     val w = Window.partitionBy(col("query_id"))
@@ -629,12 +628,11 @@ object Similarity {
   // empty cells drop (the classic Lloyd empty-cluster case, identically in
   // both engines).
   def clusterKmeans(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val base = load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("qv",
         expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6) AS BIGINT))"))
-      .withColumn("nrm", expr("graft_dotq(embedding, embedding)"))
+      .withColumn("nrm", dotq(col("embedding"), col("embedding")))
     val oldPos = base
       .select(col("label").as("cell"), posexplode(col("qv")).as(Seq("pos", "v")))
       .groupBy(col("cell"), col("pos"))
@@ -741,7 +739,6 @@ object Similarity {
     * lower per-subspace quantization error, the M knob of PQ). */
   private def pqSub(s: SparkSession, dir: String, mCount: Int,
       subDim: Int): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("qv",
@@ -779,7 +776,7 @@ object Similarity {
     // distance relation it was the PQ hot path (trained key 8.7 -> 4.2 s,
     // untrained 1.7 -> 0.9, together with the hash-agg argmin below).
     sub.join(broadcast(cb), Seq("m"))
-      .withColumn("d", expr("graft_l2q(sv, cvec)"))
+      .withColumn("d", l2q(col("sv"), col("cvec")))
 
   /** Lloyd-train the codebooks (r7): `iters` exact k-means rounds PER
     * SUBSPACE — assign every subvector to its nearest sub-centroid
@@ -925,13 +922,12 @@ object Similarity {
   // only the 10-query probe ranking uses a window.
   def simIvfPq(s: SparkSession, dir: String, nprobe: Int = 5,
       iters: Int = 4): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val mCount = 16; val subDim = 4
     def base = load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("qv",
         expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6) AS BIGINT))"))
-      .withColumn("nrm", expr("graft_dotq(embedding, embedding)"))
+      .withColumn("nrm", dotq(col("embedding"), col("embedding")))
     def scoreAgainst(df: DataFrame, cent: DataFrame): DataFrame =
       df.drop("label").crossJoin(broadcast(cent))
         .withColumn("cdot",
@@ -1010,7 +1006,7 @@ object Similarity {
         s"m -> slice(rv, m * $subDim + 1, $subDim))"))
         .as(Seq("m", "sv")))
     val dtab = qsub.join(broadcast(cb), Seq("m"))
-      .withColumn("d", expr("graft_l2q(sv, cvec)"))
+      .withColumn("d", l2q(col("sv"), col("cvec")))
       .select(col("query_id"), col("ivf_cell"), col("m"),
         col("cell").as("code"), col("d"))
     // ADC over probed cells ONLY: keying on (ivf_cell, m, code) means a
@@ -1198,7 +1194,6 @@ object Similarity {
     * newly-arriving vectors to the same deterministic cells
     * (StreamQueries.streamIndexIngest). */
   def coarseCentroids(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     load(s, dir, "embeddings")
       .select(col("label").as("cell"),
         posexplode(expr(
@@ -1237,14 +1232,13 @@ object Similarity {
   // and the output is a per-vector keep/drop verdict, not a pair list —
   // this is the operator a curation pipeline actually runs.
   def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val emb = load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
     val nRow = emb.agg(count(lit(1)).as("n"))
     val base = emb
       .withColumn("qv",
         expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6) AS BIGINT))"))
-      .withColumn("nrm", expr("graft_dotq(embedding, embedding)"))
+      .withColumn("nrm", dotq(col("embedding"), col("embedding")))
       .crossJoin(broadcast(nRow))
       .withColumn("bits",
         expr("greatest(0, least(8, cast(ceil(log2(n / 2000.0d)) as int)))"))
@@ -1284,7 +1278,7 @@ object Similarity {
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
         col("a.ccos").as("ca"), col("b.ccos").as("cb"),
-        expr("graft_dotq(a.embedding, b.embedding)").as("dot"),
+        dotq(col("a.embedding"), col("b.embedding")).as("dot"),
         col("a.nrm").as("na"), col("b.nrm").as("nb"))
       .filter(col("dot").cast("double") /
         (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))) >= 0.35)
@@ -1372,7 +1366,7 @@ object Similarity {
         col("nrm").as("q_nrm"))
     corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("graft_dotq(q_emb, embedding)").as("dot"),
+        dotq(col("q_emb"), col("embedding")).as("dot"),
         col("q_nrm"), col("nrm"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("q_nrm").cast("double")) * sqrt(col("nrm").cast("double"))))
@@ -1413,7 +1407,7 @@ object Similarity {
         col("a.bucket") === col("b.bucket") &&
           col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("neighbor_id"),
-        expr("graft_dotq(a.embedding, b.embedding)").as("dot"),
+        dotq(col("a.embedding"), col("b.embedding")).as("dot"),
         col("a.nrm").as("na"), col("b.nrm").as("nb"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
@@ -1542,7 +1536,7 @@ object Similarity {
           col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("vec_id"), col("a.tb").as("tb"),
         col("b.vec_id").as("neighbor_id"),
-        expr("graft_dotq(a.embedding, b.embedding)").as("dot"),
+        dotq(col("a.embedding"), col("b.embedding")).as("dot"),
         col("a.nrm").as("na"), col("b.nrm").as("nb"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
@@ -1578,7 +1572,7 @@ object Similarity {
       corpus.join(broadcast(nodes), corpus("vec_id") === nodes("node"))
         .join(broadcast(queries), Seq("query_id"))
         .select(col("query_id"), col("node"),
-          (expr("graft_dotq(q_emb, embedding)").cast("double") /
+          (dotq(col("q_emb"), col("embedding")).cast("double") /
             (sqrt(col("q_nrm").cast("double")) *
               sqrt(col("nrm").cast("double")))).as("cos"))
     val wq = Window.partitionBy(col("query_id"))
@@ -1825,13 +1819,13 @@ object Similarity {
   def simMatryoshka(s: SparkSession, dir: String): DataFrame = {
     val corpus = quantized(s, dir)
       .withColumn("pref", expr(s"slice(embedding, 1, $MrlPrefixDim)"))
-      .withColumn("pnrm", expr("graft_dotq(pref, pref)"))
+      .withColumn("pnrm", dotq(col("pref"), col("pref")))
     val queries = corpus.filter(col("vec_id") < AnnQueryCount)
       .select(col("vec_id").as("query_id"),
         col("embedding").as("q_emb"), col("nrm").as("q_nrm"),
         col("pref").as("q_pref"), col("pnrm").as("q_pnrm"))
     val pre = corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .withColumn("pcos", expr("graft_dotq(q_pref, pref)").cast("double") /
+      .withColumn("pcos", dotq(col("q_pref"), col("pref")).cast("double") /
         (sqrt(col("q_pnrm").cast("double")) * sqrt(col("pnrm").cast("double"))))
     val wPre = Window.partitionBy(col("query_id"))
       .orderBy(col("pcos").desc, col("vec_id"))
@@ -1839,7 +1833,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("vec_id"))
     pre.withColumn("pre_rank", row_number().over(wPre))
       .filter(col("pre_rank") <= MrlCandidates)
-      .withColumn("cos", expr("graft_dotq(q_emb, embedding)").cast("double") /
+      .withColumn("cos", dotq(col("q_emb"), col("embedding")).cast("double") /
         (sqrt(col("q_nrm").cast("double")) * sqrt(col("nrm").cast("double"))))
       .withColumn("rank", row_number().over(wFull))
       .filter(col("rank") <= 5)
@@ -1915,7 +1909,7 @@ object Similarity {
         col("q.bucket") === col("c.bucket"))
       .select(col("q.vec_id").as("vec_id"), col("q.label").as("true_label"),
         col("c.vec_id").as("neighbor_id"), col("c.label").as("n_label"),
-        expr("graft_dotq(q.embedding, c.embedding)").as("dot"),
+        dotq(col("q.embedding"), col("c.embedding")).as("dot"),
         col("q.nrm").as("qn"), col("c.nrm").as("cn"))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("qn").cast("double")) * sqrt(col("cn").cast("double"))))
@@ -1996,7 +1990,7 @@ object Similarity {
     val scored = corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("cand"),
         col("embedding").as("c_emb"),
-        expr("graft_dotq(q_emb, embedding)").as("rel"))
+        dotq(col("q_emb"), col("embedding")).as("rel"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("rel").desc, col("cand"))
     val cands = scored.withColumn("rk", row_number().over(w))
@@ -2008,7 +2002,7 @@ object Similarity {
           col("x.cand") =!= col("y.cand"))
       .select(col("x.query_id").as("query_id"), col("x.cand").as("cand"),
         col("y.cand").as("other"),
-        expr("graft_dotq(x.c_emb, y.c_emb)").as("sim"))
+        dotq(col("x.c_emb"), col("y.c_emb")).as("sim"))
       .localCheckpoint()
     // pick 1: pure relevance (S is empty, the redundancy term is 0)
     var selected = cands.groupBy(col("query_id"))
@@ -2104,12 +2098,11 @@ object Similarity {
   // the |labels|-row centroid table into a scan-local projection — the
   // corpus never shuffles, which is the whole point.
   def simNearestCentroid(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val base = load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("qv",
         expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6) AS BIGINT))"))
-      .withColumn("nrm", expr("graft_dotq(embedding, embedding)"))
+      .withColumn("nrm", dotq(col("embedding"), col("embedding")))
     val train = base.filter(col("vec_id") % 5 =!= 0)
     val cent = train
       .select(col("label").as("cell"), posexplode(col("qv")).as(Seq("pos", "v")))

@@ -409,9 +409,10 @@ object GraphOps {
 
   /** Broadcast gate for the NODE-grain driver-counted state frames of the
     * iterative loops (k-core live set, BFS/harmonic frontier + settled
-    * set, LPA label table): every loop already counts its state each
-    * round (the convergence test), so the gate is free. Below the limit
-    * the per-round equi-join against the full edge relation becomes a
+    * set, LPA label table, the dedup connected-component loops' label and
+    * star frames): every loop already counts its state (the convergence
+    * test, or once when the count is loop-invariant), so the gate is
+    * free. Below the limit the per-round equi-join against the full edge relation becomes a
     * map-side BroadcastHashJoin and the edge set is never exchanged
     * (guide §3.1 — the localCheckpointed state frames carry no size
     * stats, so without the hint every round ran SortMergeJoin with BOTH
@@ -424,7 +425,10 @@ object GraphOps {
     * large fraction of a huge vertex set. */
   private val NodeBroadcastLimit = 2L * 1000 * 1000
 
-  private def gatedBroadcast(df: DataFrame, knownCount: Long): DataFrame =
+  /** `knownCount` may be an upper bound on the frame's rows (the dedup CC
+    * loops pass nActive and 2 * eCnt): the gate then under-selects
+    * broadcasts, never over-selects. */
+  private[graft] def gatedBroadcast(df: DataFrame, knownCount: Long): DataFrame =
     if (knownCount <= NodeBroadcastLimit) broadcast(df) else df
 
   /** Evidence hook (r15): with SPARK_GRAFT_ROUND_PLANS set, the iterative

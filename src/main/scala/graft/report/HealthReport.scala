@@ -69,7 +69,7 @@ object HealthReport {
     (base, ev, buildReport(base, ev))
   }
 
-  private def buildReport(base: DataFrame, ev: DataFrame): DataFrame = {
+  private[graft] def buildReport(base: DataFrame, ev: DataFrame): DataFrame = {
     // r15 (guide §2.4, §1.5): the long-form assembly used to be 30
     // `union` branches, one per report line — and Spark does not dedupe
     // common subtrees across union branches, so every branch re-ran its
@@ -118,8 +118,9 @@ object HealthReport {
         count(col("lk")).as("sr"),
         count(when(col("rev") > 1000, lit(1))).as("rr"),
         round(sumDec(col("rev")), 2).as("trev"))
+      // null, not a division-by-zero error, when there are no subitems
       .withColumn("coverage",
-        roundVia((lit(100) * col("rr")).cast("double") / col("sr"), 1))
+        roundVia(try_divide((lit(100) * col("rr")).cast("double"), col("sr")), 1))
     // ONE pass over events serves the cost panel AND freshness (was two):
     // the per-type rollup groups the WHOLE slice — types outside the cost
     // map fall out of the max(when) pivot exactly as the old pre-filter
@@ -155,18 +156,23 @@ object HealthReport {
       .agg(count(col("lk")).as("n"), round(sumDec(col("rev")), 2).as("crev"))
 
     // ---- assembly: one long-form relation -----------------------------------
-    // The single-row sections (latest / P&L / duplicates) fold into ONE
-    // row via broadcast cross joins; freshness derives from as_of (latest)
-    // and now_d (the events pass) in place. Every fixed report line is a
-    // struct constructor over that row — `inline` expands them with zero
-    // re-aggregation. The circle section is the only multi-row source: its
-    // two lines per circle ride one inline over the 4-row aggregate.
+    // The single-row sections fold into ONE row: P&L and duplicates are
+    // global aggregates (always one row, even over an empty fact frame)
+    // and cross-join; `latest` has no row when the frame is empty, so it
+    // left-joins in and the report stays partial (daily_latest and
+    // freshness values null) instead of vanishing. Freshness derives from
+    // as_of (latest) and now_d (the events pass) in place. Every fixed
+    // report line is a struct constructor over that row — `inline`
+    // expands them with zero re-aggregation. The circle section is the
+    // only multi-row source: its two lines per circle ride one inline
+    // over the 4-row aggregate.
     def line(section: String, metric: Column, value: Column,
         flag: Column = noFlag): Column =
       struct(lit(section).as("section"), metric.as("metric"),
         value.cast("double").as("value"), flag.as("triggered"))
 
-    val one = latest.crossJoin(broadcast(pl)).crossJoin(broadcast(dups))
+    val one = pl.crossJoin(broadcast(dups))
+      .join(broadcast(latest), lit(true), "left")
       .withColumn("epoch_day",
         datediff(col("as_of"), lit("1970-01-01").cast("date")))
       .withColumn("days_since", datediff(col("now_d"), col("as_of")))

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.flatten.Flatten
@@ -11,11 +10,7 @@ import graft.sink.Sinks
   * `sbt "runMain graft.streaming.StreamDemo"` */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val base = s"${sys.props("java.io.tmpdir")}/graft_stream_demo"
     Sinks.deleteDir(base)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.expressions.GraftFunctions.dotq
 import graft.model.Tables
 import graft.sink.Sinks
 
@@ -1127,11 +1128,10 @@ object StreamQueries {
         .writeStream
         .option("checkpointLocation", s"$base/ckpt")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.expressions.GraftFunctions.register(batch.sparkSession)
           val assigned = batch
             .withColumn("qv", expr(
               "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6) AS BIGINT))"))
-            .withColumn("nrm", expr("graft_dotq(embedding, embedding)"))
+            .withColumn("nrm", dotq(col("embedding"), col("embedding")))
             .filter(col("nrm") > 0)
             .crossJoin(broadcast(cent))
             .withColumn("cdot", expr(

@@ -4,17 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite, UTC, small shuffle). */
+/** Shared local SparkSession for specs: the library's own session recipe
+  * on 4 cores, so every spec sees what the mains run on. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .appName(getClass.getSimpleName)
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(cpus = 4)
 
   override def afterAll(): Unit = {
     // keep the session for sibling suites (same JVM under sbt test)

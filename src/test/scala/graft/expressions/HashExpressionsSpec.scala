@@ -11,7 +11,6 @@ class HashExpressionsSpec extends SparkSpec {
   private val toksE = "filter(split(lower(text), '[^a-z0-9]+'), t -> t <> '')"
 
   test("graft_simhash16 equals the declarative hex-digit-vote simhash") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), expr(s"array_distinct($toksE)").as("toks"))
       .filter(size(col("toks")) > 0)
@@ -27,7 +26,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("graft_minhash16 equals the declarative md5 minhash signature") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), expr(toksE).as("toks"))
       .filter(size(col("toks")) >= 3)
@@ -45,7 +43,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("graft_shingle3 equals the declarative tokenize+3gram+distinct chain") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       // exercise the tokenizer edges too: punctuation, unicode, digits
       .withColumn("text", concat(col("text"),
@@ -61,7 +58,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("graft_dotq equals the declarative quantize/zip_with/aggregate dot product") {
-    GraftFunctions.register(spark)
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"),
         expr("transform(embedding, x -> cast(floor(cast(x as double) * 1e6) as bigint))")
@@ -74,7 +70,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("graft_l2q equals the declarative zip_with/aggregate squared L2 (r7)") {
-    GraftFunctions.register(spark)
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(floor(cast(x as double) * 1e6) as bigint))")
@@ -93,7 +88,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("expressions participate in whole-stage codegen (no fallback)") {
-    GraftFunctions.register(spark)
     // input built from codegen-able expressions only (a higher-order-function
     // lambda in the INPUT would block codegen of the whole projection — which
     // is exactly why these native expressions exist)
@@ -106,7 +100,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("graft_nfc: Unicode NFC composition, idempotence, codegen participation (r11)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(
       "Cafe\u0301",          // e + COMBINING ACUTE -> precomposed U+00E9

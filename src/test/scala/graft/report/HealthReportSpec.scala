@@ -81,4 +81,28 @@ class HealthReportSpec extends SparkSpec {
     assert(covFlag == (covVal < 60.0))
     report.unpersist()
   }
+
+  test("empty fact frame: the report stays partial, daily and freshness values null") {
+    val (base, ev, _) = HealthReport.healthParts(spark, sfDir)
+    val rows = HealthReport.buildReport(base.limit(0), ev).collect()
+    val bySection = rows.groupBy(_.getString(0))
+    // no circle rows (no facts), but every fixed line is still emitted
+    assert(bySection.keySet ==
+      Set("daily_latest", "completeness", "duplicates", "freshness", "alerts"))
+    assert(bySection.map { case (k, v) => k -> v.length } == Map(
+      "daily_latest" -> 7, "completeness" -> 14, "duplicates" -> 1,
+      "freshness" -> 2, "alerts" -> 4))
+    // no latest day: its values, and freshness derived from it, are null
+    (bySection("daily_latest") ++ bySection("freshness")).foreach { r =>
+      assert(r.isNullAt(2), s"expected a null value: $r")
+    }
+    val value = rows.map(r => (r.getString(0), r.getString(1)) -> r).toMap
+    assert(value(("completeness", "projects_rows")).getDouble(2) == 0.0)
+    assert(value(("completeness", "subitems_rows")).getDouble(2) == 0.0)
+    assert(value(("duplicates", "duplicate_keys")).getDouble(2) == 0.0)
+    val dupAlert = value(("alerts", "duplicate_rows"))
+    assert(dupAlert.getDouble(2) == 0.0 && !dupAlert.getBoolean(3))
+    // the cost panel comes from events alone and is unaffected
+    assert(!value(("completeness", "personnel_costs_rows")).isNullAt(2))
+  }
 }

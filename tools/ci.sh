@@ -45,6 +45,27 @@ if grep -rn 'createTempDirectory' src/main/scala --include='*.scala' \
   echo "LINT FAIL: createTempDirectory outside graft/Artifacts.scala (derive the artifact through Artifacts.derive)" >&2
   exit 1
 fi
+# One session recipe: every SparkSession in src/main is built by
+# `graft.Session.local`, so no main measures a session the others don't.
+if grep -rn 'SparkSession\.builder' src/main/scala --include='*.scala' \
+    | grep -v '^src/main/scala/graft/Session\.scala:'; then
+  echo "LINT FAIL: SparkSession.builder outside graft/Session.scala (build the session with graft.Session.local)" >&2
+  exit 1
+fi
+# The graft functions reach library code as typed columns
+# (graft.expressions.GraftFunctions) and SQL text through GraftExtensions,
+# installed at session build. A per-session registration, or a library
+# call that resolves a graft function by its SQL name, would break on a
+# session built without the extension.
+if grep -rn 'GraftFunctions\.register' src etlbench --include='*.scala'; then
+  echo "LINT FAIL: GraftFunctions.register (the functions are installed by GraftExtensions at session build)" >&2
+  exit 1
+fi
+if grep -rnE 'expr\("[^"]*graft_(simhash16|minhash16|dotq|l2q|shingle3|nfc)\(' \
+    src/main/scala --include='*.scala'; then
+  echo "LINT FAIL: graft function called by SQL name in src/main (use the typed GraftFunctions column)" >&2
+  exit 1
+fi
 # Window-partition lint (r10 VERDICT item 8): a window partitioned by a
 # known low-cardinality column ALONE, or an unpartitioned Window.orderBy,
 # sorts a fact-sized partition in one task at 100x. Legitimate sites
