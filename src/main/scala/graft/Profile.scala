@@ -1,9 +1,11 @@
 package graft
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Ad-hoc profiler: `runMain graft.Profile <key> [<key>...]` times each named
@@ -12,7 +14,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * to find which stage of a multi-job operator (checkpoints, loops) owns the
   * wall time — and that run's formatted physical plan as executed, i.e.
   * with AQE's final choices (a pre-execution `explain` shows only the
-  * initial plan). Runs on `Session.local`, the session Bench measures.
+  * initial plan), followed by the round-1 plan (as planned, before AQE) of
+  * each loop the key ran (a `graft.Iterate` round's jobs are described
+  * `<tag> round <r>`).
+  * Runs on `Session.local`, the session Bench measures.
   * A diagnostic tool: Bench writes the benchmark artifact.
   */
 object Profile {
@@ -22,6 +27,16 @@ object Profile {
 
     val jobs = scala.collection.mutable.LinkedHashMap[Int, (Long, String)]()
     val ends = scala.collection.mutable.LinkedHashMap[Int, Long]()
+    // each loop tag's round-1 checkpoint plan: the state update whose
+    // joins run broadcast or shuffled, which the key's final plan (a scan
+    // of the checkpointed state) never shows. A `graft.Iterate` round
+    // describes its jobs "<tag> round <r>", the SQL execution start event
+    // carries that description, and its call site names the action.
+    // Taken from the first run that executes the loop (the warmup run for
+    // a loop inside an `Artifacts.derive` build).
+    val roundPlans = scala.collection.mutable.LinkedHashMap[String, String]()
+    var shownPlans = 0
+    val RoundOne = "(.+) round 1".r
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.synchronized {
@@ -31,6 +46,17 @@ object Profile {
         }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
         ends.synchronized { ends(j.jobId) = j.time }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.details.startsWith("org.apache.spark.sql.classic.Dataset.localCheckpoint") =>
+          x.description match {
+            case RoundOne(tag) => roundPlans.synchronized {
+              if (!roundPlans.contains(tag)) roundPlans(tag) = x.physicalPlanDescription
+            }
+            case _ => ()
+          }
+        case _ => ()
+      }
     })
 
     // every run's noop write, as executed (listener events arrive in
@@ -56,15 +82,22 @@ object Profile {
       writes.clear()
       once(name) // warmup
       val t1 = once(name)
+      // a run's write event trails all of its job events: drain the first
+      // two runs before the job list restarts for the last one
+      (1 to 2).foreach(_ => writes.poll(60, TimeUnit.SECONDS))
       jobs.synchronized(jobs.clear()); ends.synchronized(ends.clear())
       val t2 = once(name)
+      val last = Option(writes.poll(60, TimeUnit.SECONDS))
       println(f"[profile] $name%-28s min=${math.min(t1, t2)}%6.2fs  (p1=$t1%5.2f p2=$t2%5.2f)")
       jobs.foreach { case (id, (start, desc)) =>
         val dur = ends.get(id).map(e => (e - start) / 1e3).getOrElse(-1.0)
         println(f"    job $id%3d ${dur}%7.2fs  $desc")
       }
-      val last = (1 to 3).map(_ => Option(writes.poll(60, TimeUnit.SECONDS))).last
       last.foreach(qe => println(qe.explainString(FormattedMode)))
+      roundPlans.synchronized(roundPlans.toSeq).drop(shownPlans).foreach {
+        case (tag, plan) => println(s"===== per-round plan: $tag round 1 =====\n$plan")
+      }
+      shownPlans = roundPlans.synchronized(roundPlans.size)
     }
     spark.stop()
   }

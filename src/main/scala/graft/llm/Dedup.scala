@@ -4,9 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
+import graft.Iterate.gatedBroadcast
 import graft.expressions.GraftFunctions.{dotq, minhash16, shingle3, simhash16}
 import graft.model.Tables.load
-import graft.operators.GraphOps.gatedBroadcast
+import graft.operators.GraphOps
 
 /** Deduplication operators for a training-data pipeline, over `documents`.
   *
@@ -500,7 +502,8 @@ object Dedup {
     val (repMap, sym) = clusterPrelude(s, docsIn)
     // |labels| ≤ |sym| (every active vertex has an incident edge), and sym
     // is checkpointed — one cheap count gates the reattach broadcast (r15)
-    reattachMembers(repMap, minLabelCc(sym), sym.count())
+    reattachMembers(repMap, GraphOps.minLabelCc(sym, "dedup_cc_minlabel", 64),
+      sym.count())
   }
 
   /** Exact-dup pre-collapse + verified-pair edge build shared by both CC
@@ -555,51 +558,6 @@ object Dedup {
     (repMap, sym)
   }
 
-  /** Min-label propagation to the component-min fixpoint over a symmetric
-    * edge set; returns (doc_id, cluster_id) for every active vertex. */
-  private[llm] def minLabelCc(sym: DataFrame): DataFrame = {
-    // ACTIVE-VERTEX set (r4): only vertices incident to a pair can ever
-    // change label — everyone else is its own singleton cluster. Iterating
-    // over that set instead of the whole corpus shrinks every superstep
-    // from |corpus| to |dup vertices| (orders of magnitude at 100 TB,
-    // where dup density is a few percent), and the corpus is touched
-    // exactly once, by the final left join. Each superstep also carries
-    // the previous label alongside the new one, so the convergence check
-    // reads the checkpointed superstep output directly instead of
-    // re-joining against the previous labels (one join per superstep, not
-    // two).
-    var labels = sym.select(col("src").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .localCheckpoint()
-    // the active-vertex count is LOOP-INVARIANT (labels keeps the same
-    // doc_ids every superstep) — one count of the checkpointed frame
-    // gates every round's broadcasts (r15; guide §3.1)
-    val nActive = labels.count()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 64) {
-      iter += 1
-      // label table broadcasts below the gate → the edge relation is
-      // never exchanged; nbr_min (≤ |active| rows) broadcasts into the
-      // left join, so the superstep's only shuffle is the vertex-grain
-      // hash-agg
-      val nbrMin = sym.join(gatedBroadcast(labels, nActive), col("dst") === col("doc_id"))
-        .groupBy(col("src")).agg(min(col("cluster_id")).as("nbr_min"))
-      val stepOut = labels.join(gatedBroadcast(nbrMin, nActive),
-          labels("doc_id") === nbrMin("src"), "left")
-        .select(labels("doc_id"), labels("cluster_id").as("old_cluster"),
-          least(labels("cluster_id"),
-            coalesce(col("nbr_min"), labels("cluster_id"))).as("cluster_id"))
-      graft.operators.GraphOps.maybeDumpRoundPlan("dedup_cc_minlabel", iter, stepOut)
-      val next = stepOut.localCheckpoint()
-      val delta = next.filter(col("cluster_id") < col("old_cluster")).count()
-      labels = next.select(col("doc_id"), col("cluster_id"))
-      converged = delta == 0
-    }
-    require(converged, s"label propagation did not converge in $iter supersteps")
-    labels
-  }
-
   /** Reattach collapsed members: every doc takes its representative's
     * component label; a rep not in `labels` is a singleton component
     * (its exact group, possibly of size 1) labeled by the rep itself.
@@ -646,29 +604,24 @@ object Dedup {
   }
 
   private[llm] def twophaseCc(sym0: DataFrame): DataFrame = {
-    // canonical undirected form: (u, v) with u > v, no self-loops
-    var e = sym0.filter(col("src") =!= col("dst"))
+    // canonical undirected form: (u, v) with u > v, no self-loops. The
+    // edge count of each round's set is taken once and carried: it gates
+    // convergence and, since |vertices| ≤ 2·|edges|, bounds the per-round
+    // min-neighbor tables for the broadcast gate (r15; guide §3.1)
+    val e0 = Iterate.checkpoint(sym0.filter(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint()
-    var converged = false
-    var iter = 0
-    // edge count of e, counted up-front (the checkpointed blocks make it
-    // cheap) and carried across rounds — it both gates convergence and,
-    // since |vertices| ≤ 2·|edges|, bounds the per-round min-neighbor
-    // tables for the broadcast gate (r15; guide §3.1)
-    var eCnt = e.count()
-    while (!converged && iter < 48) {
-      iter += 1
+      .distinct())
+    val (fix, _) = Iterate.untilStable("dedup_cc_twophase", 48, e0) { (e, _) =>
       // large-star over the symmetric view: (v, m(u)) for v > u.
       // v > u ≥ m(u) keeps the output canonical and self-loop-free.
-      val symE = e.union(e.select(col("v").as("u"), col("u").as("v")))
+      val symE = e.df.union(e.df.select(col("v").as("u"), col("u").as("v")))
       val mL = symE.groupBy(col("u")).agg(min(col("v")).as("mn"))
         .select(col("u").as("c"), least(col("u"), col("mn")).as("m"))
       // both min-neighbor tables broadcast below the gate, so the edge
       // stream is never exchanged for the joins — each round's shuffles
       // are the two hash-aggs and the two distincts only
-      val ls = symE.join(gatedBroadcast(mL, 2 * eCnt), symE("u") === col("c"))
+      val ls = symE.join(gatedBroadcast(mL, 2 * e.rows), symE("u") === col("c"))
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .distinct()
@@ -676,20 +629,15 @@ object Dedup {
       // neighbor; children {v ≠ m} and u itself re-attach to m — output
       // stays canonical ((v, m): v > m since m is the min; (u, m): u > m).
       val mS = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val stepOut = ls.join(gatedBroadcast(mS, 2 * eCnt), Seq("u"))
+      val next = Iterate.checkpoint(ls.join(gatedBroadcast(mS, 2 * e.rows), Seq("u"))
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(mS.select(col("u"), col("m").as("v")))
-        .distinct()
-      graft.operators.GraphOps.maybeDumpRoundPlan("dedup_cc_twophase", iter, stepOut)
-      val next = stepOut.localCheckpoint()
-      val nextCnt = next.count()
+        .distinct())
       // both sets are distinct: equal cardinality + containment = equality
-      converged = nextCnt == eCnt && next.exceptAll(e).isEmpty
-      e = next
-      eCnt = nextCnt
+      (next, next.rows == e.rows && next.df.exceptAll(e.df).isEmpty)
     }
-    require(converged, s"large/small-star did not converge in $iter rounds")
+    val e = fix.df
     // at the fixpoint the edge set must be a star forest: one parent per
     // child (read-off would emit duplicate labels otherwise)
     require(e.groupBy(col("u")).agg(count(lit(1)).as("k"))

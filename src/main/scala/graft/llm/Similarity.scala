@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
 import graft.expressions.GraftFunctions.{dotq, l2q}
 import graft.model.Tables.load
 
@@ -794,9 +795,8 @@ object Similarity {
     * floor; training spreads them and is measured (LlmOpsSpec) to
     * multiply recall. */
   private def pqTrainCodebooks(sub: DataFrame, cb0: DataFrame,
-      iters: Int): DataFrame = {
-    var cb = cb0
-    for (_ <- 1 to iters) {
+      iters: Int): DataFrame =
+    Iterate.upTo("pq_train", iters, cb0) { (cb, _) =>
       // argmin as min(struct(d, cell)) — a TWO-PHASE map-side-combining
       // hash agg over the (subvector x cell) distance rows instead of a
       // Window sort of the same rows (with the native L2 below: trained
@@ -809,18 +809,15 @@ object Similarity {
         .groupBy(col("vec_id"), col("m"))
         .agg(min(struct(col("d"), col("cell"))).as("best"),
           first(col("sv")).as("sv"))
-      cb = assigned
+      (Iterate.checkpoint(assigned
         .select(col("best.cell").as("cell"), col("m"),
           posexplode(col("sv")).as(Seq("pos", "v")))
         .groupBy(col("cell"), col("m"), col("pos"))
         .agg(expr("sum(v) div count(1)").as("cd"))
         .groupBy(col("cell"), col("m"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, cd))), x -> x.cd)")
-          .as("cvec"))
-        .localCheckpoint()
-    }
-    cb
-  }
+          .as("cvec"))).df, false)
+    }._1
 
   /** Nearest-sub-centroid code per (vector, subspace) — the encode
     * argmin as a min(struct(d, cell)) two-phase hash agg (r7 — replaces
@@ -1577,19 +1574,20 @@ object Similarity {
               sqrt(col("nrm").cast("double")))).as("cos"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("node"))
-    var visited = score(entry).localCheckpoint()
-    var frontier = visited.select(col("query_id"), col("node"))
-    (1 to hops).foreach { _ =>
-      val cand = frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("query_id"), col("dst").as("node")).distinct()
-        .join(visited.select(col("query_id"), col("node")),
-          Seq("query_id", "node"), "left_anti")
-      val scored = score(cand).localCheckpoint() // per-hop walk state
-      visited = visited.union(scored).localCheckpoint()
-      frontier = scored.withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= beam).select(col("query_id"), col("node"))
-    }
-    visited
+    val visited0 = Iterate.checkpoint(score(entry)).df
+    Iterate.upTo("beam_walk", hops,
+        (visited0, visited0.select(col("query_id"), col("node")))) {
+      case ((visited, frontier), _) =>
+        val cand = frontier.join(edges, frontier("node") === edges("src"))
+          .select(col("query_id"), col("dst").as("node")).distinct()
+          .join(visited.select(col("query_id"), col("node")),
+            Seq("query_id", "node"), "left_anti")
+        val scored = Iterate.checkpoint(score(cand)).df // per-hop walk state
+        ((Iterate.checkpoint(visited.union(scored)).df,
+          scored.withColumn("rn", row_number().over(wq))
+            .filter(col("rn") <= beam).select(col("query_id"), col("node"))),
+          false)
+    }._1._1
   }
 
   /** Top-5 presentation shared by the graph-ANN keys. */
@@ -2005,24 +2003,26 @@ object Similarity {
         dotq(col("x.c_emb"), col("y.c_emb")).as("sim"))
       .localCheckpoint()
     // pick 1: pure relevance (S is empty, the redundancy term is 0)
-    var selected = cands.groupBy(col("query_id"))
+    val pick1 = cands.groupBy(col("query_id"))
       .agg(expr(s"max_by(cand, CAST(rel AS DECIMAL(38,0)) * $MmrComposite - cand)")
         .as("cand"))
       .withColumn("pick", lit(1))
-    for (t <- 2 to MmrK) {
-      val sel = selected.select(col("query_id"), col("cand"))
-      val rem = cands.join(sel, Seq("query_id", "cand"), "left_anti")
-      val next = rem
-        .join(sims, Seq("query_id", "cand"))
-        .join(sel.withColumnRenamed("cand", "other"), Seq("query_id", "other"))
-        .groupBy(col("query_id"), col("cand"))
-        .agg(max(col("rel")).as("rel"), max(col("sim")).as("maxsim"))
-        .groupBy(col("query_id"))
-        .agg(expr(
-          s"max_by(cand, CAST(rel - maxsim AS DECIMAL(38,0)) * $MmrComposite - cand)")
-          .as("cand"))
-        .withColumn("pick", lit(t))
-      selected = selected.unionAll(next).localCheckpoint()
+    // picks 2..MmrK, one greedy round each
+    val (selected, _) = Iterate.upTo("sim_mmr_rerank", MmrK - 1, pick1) {
+      (picked, round) =>
+        val sel = picked.select(col("query_id"), col("cand"))
+        val rem = cands.join(sel, Seq("query_id", "cand"), "left_anti")
+        val next = rem
+          .join(sims, Seq("query_id", "cand"))
+          .join(sel.withColumnRenamed("cand", "other"), Seq("query_id", "other"))
+          .groupBy(col("query_id"), col("cand"))
+          .agg(max(col("rel")).as("rel"), max(col("sim")).as("maxsim"))
+          .groupBy(col("query_id"))
+          .agg(expr(
+            s"max_by(cand, CAST(rel - maxsim AS DECIMAL(38,0)) * $MmrComposite - cand)")
+            .as("cand"))
+          .withColumn("pick", lit(round + 1))
+        (Iterate.checkpoint(picked.unionAll(next)).df, false)
     }
     selected.join(cands.select(col("query_id"), col("cand"), col("rel")),
         Seq("query_id", "cand"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Iterate
+import graft.Iterate.gatedBroadcast
 import graft.model.Tables.load
 import graft.table.VersionedTable
 
@@ -104,39 +106,31 @@ object GraphOps {
 
   /** Iterate supersteps until max |Δrank| ≤ tol (driver-side scalar per
     * round, like dedup_clusters' convergence count) or maxRounds. In
-    * convergence mode each round's state is localCheckpointed so lineage
+    * convergence mode each round's state is checkpointed so lineage
     * stays O(1), and the delta read doubles as the materializing action.
     * A negative tol never converges early — it runs exactly maxRounds
     * (the spec uses this to prove the fixed-round key is a prefix of this
     * same iteration) — and because no per-round delta is needed, fixed
     * mode runs ZERO driver actions inside the loop: no checkpoint, no
     * collect, just an O(maxRounds)-deep declared plan executed once by
-    * the caller's action (callers keep maxRounds small in this mode). */
+    * the caller's action (callers keep maxRounds small in this mode).
+    * Loud non-convergence (r7): the conv oracle's recursive CTE iterates
+    * until delta <= tol with NO round cap, so exiting at maxRounds
+    * un-converged would be a silent engine/oracle divergence — the
+    * driver's cap failure fires instead. */
   private[operators] def pagerankLoop(edges: DataFrame, deg: DataFrame,
       nodes: DataFrame, tol: Long, maxRounds: Int,
       init: Option[DataFrame] = None): (DataFrame, Int) = {
-    var rank = init
+    val rank0 = init
       .getOrElse(nodes.select(col("node"), lit(1000000L).as("r")))
-    var rounds = 0
-    var delta = Long.MaxValue
-    while (delta > tol && rounds < maxRounds) {
-      rounds += 1
-      if (tol < 0) {
-        rank = step(edges, deg, rank).select(col("node"), col("r"))
-      } else {
-        val next = step(edges, deg, rank).localCheckpoint()
-        delta = next.agg(max(abs(col("r") - col("rp")))).collect()(0).getLong(0)
-        rank = next.select(col("node"), col("r"))
-      }
+    if (tol < 0)
+      ((1 to maxRounds).foldLeft(rank0)((rank, _) =>
+        step(edges, deg, rank).select(col("node"), col("r"))), maxRounds)
+    else Iterate.untilStable("pagerank", maxRounds, rank0) { (rank, _) =>
+      val next = Iterate.checkpoint(step(edges, deg, rank)).df
+      val delta = next.agg(max(abs(col("r") - col("rp")))).collect()(0).getLong(0)
+      (next.select(col("node"), col("r")), delta <= tol)
     }
-    // Loud non-convergence (r7): the conv oracle's recursive CTE iterates
-    // until delta <= tol with NO round cap, so exiting here at maxRounds
-    // un-converged would be a silent engine/oracle divergence. Fail fast
-    // instead — the same contract dedup_clusters' CC loop enforces. A
-    // negative tol opts out (the fixed-round keys run exactly maxRounds).
-    require(tol < 0 || delta <= tol,
-      s"pagerank did not converge in $maxRounds rounds (delta=$delta > tol=$tol)")
-    (rank, rounds)
   }
 
   // ---- graph_pagerank -------------------------------------------------------
@@ -406,48 +400,6 @@ object GraphOps {
     * `broadcast()` this replaces was the one data-proportional broadcast
     * in the suite that nothing ever de-selected (r9 VERDICT). */
   private val BroadcastEdgeLimit = 400L * 1000
-
-  /** Broadcast gate for the NODE-grain driver-counted state frames of the
-    * iterative loops (k-core live set, BFS/harmonic frontier + settled
-    * set, LPA label table, the dedup connected-component loops' label and
-    * star frames): every loop already counts its state (the convergence
-    * test, or once when the count is loop-invariant), so the gate is
-    * free. Below the limit the per-round equi-join against the full edge relation becomes a
-    * map-side BroadcastHashJoin and the edge set is never exchanged
-    * (guide §3.1 — the localCheckpointed state frames carry no size
-    * stats, so without the hint every round ran SortMergeJoin with BOTH
-    * sides shuffled; measured at sf0.1: graph_kcore 2.8→1.1s isolated,
-    * 2 SMJ + 6 Exchange → 2 BHJ + 1 Exchange per round). The limit is
-    * memory-bound, not speed-bound: state rows are 1–3 longs (≤ ~50 MB
-    * per 2M rows resident as a HashedRelation), two orders of magnitude
-    * under executor headroom — past it the round keeps the shuffled
-    * plan, which is the right 100 TB shape for a frontier that IS a
-    * large fraction of a huge vertex set. */
-  private val NodeBroadcastLimit = 2L * 1000 * 1000
-
-  /** `knownCount` may be an upper bound on the frame's rows (the dedup CC
-    * loops pass nActive and 2 * eCnt): the gate then under-selects
-    * broadcasts, never over-selects. */
-  private[graft] def gatedBroadcast(df: DataFrame, knownCount: Long): DataFrame =
-    if (knownCount <= NodeBroadcastLimit) broadcast(df) else df
-
-  /** Evidence hook (r15): with SPARK_GRAFT_ROUND_PLANS set, the iterative
-    * loops print the physical plan of their FIRST round's state update —
-    * the final `explain` of a loop key only shows the closing aggregation
-    * over the checkpointed state, so whether the per-round joins actually
-    * run broadcast or shuffled is otherwise invisible in any plan dump.
-    * Round plans piggyback on stdout; the flag is never set in bench or
-    * verify runs. Superseded per-round broadcasts are reclaimed by the
-    * async ContextCleaner once the round's localCheckpoint + count()
-    * drops the last plan reference (noted per r14 ADVICE — ≤32 rounds of
-    * ≤2M-row state between cleaner sweeps is bounded; the bench drains
-    * residue between keys). */
-  private[graft] def maybeDumpRoundPlan(tag: String, round: Int, df: DataFrame): Unit =
-    if (round == 1 && sys.env.contains("SPARK_GRAFT_ROUND_PLANS")) {
-      println(s"===== per-round plan: $tag round $round =====")
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    }
 
   private def trianglesFromOriented(
       o: DataFrame, forcePartitioned: Boolean = false,
@@ -726,39 +678,39 @@ object GraphOps {
     val (edges, _, nodes) = buildGraph(s, dir)
     val seeds = nodes.filter(col("node") % 7 === 0)
       .select(col("node"), lit(0).as("dist"))
-    var known = seeds.localCheckpoint()
-    var frontier = known
-    var level = 0
-    var frontierSize = frontier.count()
-    // settled-set size = cumulative frontier sizes — tracked so both the
-    // expansion join and the anti-join can take the free broadcast gate
-    var knownSize = frontierSize
-    while (frontierSize > 0 && level < 32) {
-      level += 1
-      // r15 (guide §2.3): the settled-set anti-join runs BEFORE the
-      // distinct — they commute (both key on `node`), and with the settled
-      // set broadcast the anti is a map-side filter, so the distinct's
-      // exchange carries only UNSEEN candidates instead of the whole
-      // expansion (in late rounds almost every candidate is already
-      // settled).
-      val step = edges
-        .join(gatedBroadcast(frontier.select(col("node")), frontierSize),
-          edges("src") === col("node"))
-        .select(col("dst").as("node"))
-        .join(gatedBroadcast(known.select(col("node").as("seen")), knownSize),
-          col("node") === col("seen"), "left_anti")
-        .distinct()
-        .select(col("node"), lit(level).as("dist"))
-      maybeDumpRoundPlan("graph_bfs_distance", level, step)
-      val nxt = step.localCheckpoint()
-      frontierSize = nxt.count()
-      if (frontierSize > 0) {
-        known = known.union(nxt).localCheckpoint()
-        knownSize += frontierSize
-      }
-      frontier = nxt
+    frontierWalk("graph_bfs_distance", edges, seeds, Nil, depth = 32)
+      .select(col("node").as("suppkey"), col("dist")).orderBy(col("suppkey"))
+  }
+
+  /** The frontier walk of graph_bfs_distance and graph_harmonic: from
+    * `seeds` (carry..., node, dist = 0), at most `depth` levels, stopping
+    * when the frontier empties; returns the settled set. The `carry`
+    * columns ride with each node (the seed for harmonic), so shuffle keys
+    * stay node-grain. The frontier count (the stop test) and the settled
+    * size (the running sum of the disjoint levels) fund the broadcast gate
+    * for both joins. r15 (guide §2.3): the anti-join runs BEFORE the
+    * distinct — they commute, and with the settled set broadcast the anti
+    * is a map-side filter, so the distinct's exchange carries only UNSEEN
+    * candidates. */
+  private def frontierWalk(tag: String, edges: DataFrame, seeds: DataFrame,
+      carry: Seq[String], depth: Int): DataFrame = {
+    val key = carry :+ "node"
+    val start = Iterate.checkpoint(seeds)
+    val ((known, _), _) = Iterate.upTo(tag, depth, (start, start)) {
+      case ((known, frontier), level) =>
+        val nxt = Iterate.checkpoint(edges
+          .join(gatedBroadcast(frontier.df.select(key.map(col): _*),
+            frontier.rows), edges("src") === col("node"))
+          .select(carry.map(col) :+ col("dst").as("node"): _*)
+          .join(gatedBroadcast(known.df.select(key.map(col): _*), known.rows),
+            key, "left_anti")
+          .distinct()
+          .withColumn("dist", lit(level)))
+        if (nxt.rows == 0) ((known, nxt), true)
+        else ((Iterate.checkpoint(known.df.union(nxt.df), known.rows + nxt.rows),
+          nxt), false)
     }
-    known.select(col("node").as("suppkey"), col("dist")).orderBy(col("suppkey"))
+    known.df
   }
 
   private val graphBfsDistanceOracle =
@@ -785,13 +737,10 @@ object GraphOps {
   // values, sampled seed set) and a BOUNDED RADIUS R=4 (the HyperBall
   // move, Boldi & Vigna — contributions beyond R are ≤ 1/R each and the
   // frontier loop gets a fixed round bound instead of graph eccentricity).
-  // The walk is the graph_bfs_distance frontier loop with the seed riding
-  // the state: each level is one equi-join (edges ⋈ frontier on the node
-  // key) + distinct + anti-join against the settled (seed, node) set, so
-  // per-round shuffle keys stay node-grain and state is ≤ |seeds|·|V|
-  // rows. 1/d is summed as exact integer millionths (1000000 div d —
-  // truncating div matches both engines on positives; no float ever),
-  // the agg_diversity ppm discipline.
+  // The walk is graph_bfs_distance's `frontierWalk` with the seed riding
+  // the state, so state is ≤ |seeds|·|V| rows. 1/d is summed as exact
+  // integer millionths (1000000 div d — truncating div matches both
+  // engines on positives; no float ever), the agg_diversity ppm discipline.
   //
   // The sample must be FIXED-SIZE, not a fixed modulus: Eppstein-Wang
   // accuracy is ε ∝ 1/√k independent of n, while a %-of-catalog seed set
@@ -812,35 +761,8 @@ object GraphOps {
       .filter(col("node") % 100 === 0)
       .orderBy(col("node")).limit(HarmonicSeedK)
       .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
-    var known = seeds.localCheckpoint()
-    var frontier = known
-    var level = 0
-    var frontierSize = frontier.count()
-    var knownSize = frontierSize // the graphBfsDistance broadcast-gate device
-    while (frontierSize > 0 && level < HarmonicRadius) {
-      level += 1
-      // r15: settled-set anti-join BEFORE the distinct (they commute on
-      // (seed, node)) — map-side when the settled set broadcasts, so the
-      // distinct's exchange carries only unseen (seed, node) candidates;
-      // see the graph_bfs_distance note.
-      val step = edges
-        .join(gatedBroadcast(frontier.select(col("seed"), col("node")),
-          frontierSize), edges("src") === col("node"))
-        .select(col("seed"), col("dst").as("node"))
-        .join(gatedBroadcast(known.select(col("seed"), col("node")), knownSize),
-          Seq("seed", "node"), "left_anti")
-        .distinct()
-        .withColumn("dist", lit(level))
-      maybeDumpRoundPlan("graph_harmonic", level, step)
-      val nxt = step.localCheckpoint()
-      frontierSize = nxt.count()
-      if (frontierSize > 0) {
-        known = known.union(nxt).localCheckpoint()
-        knownSize += frontierSize
-      }
-      frontier = nxt
-    }
-    known.filter(col("dist") > 0)
+    frontierWalk("graph_harmonic", edges, seeds, Seq("seed"), HarmonicRadius)
+      .filter(col("dist") > 0)
       .groupBy(col("seed"))
       .agg(count(lit(1)).as("n_reached"),
         sum(expr("1000000 div dist")).cast("long").as("harmonic_ppm"))
@@ -1063,32 +985,22 @@ object GraphOps {
     val st = deg0.agg(count(lit(1)).as("n"), sum(col("dg")).as("sd")).head()
     val (n0, sd) = (st.getLong(0), st.getLong(1))
     val k = (3L * sd + 5L * n0 - 1) / (5L * n0)
-    var live = deg0.filter(col("dg") >= k).select(col("p").as("node"))
-      .localCheckpoint()
-    var n = live.count()
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < KcoreMaxRounds) {
-      rounds += 1
-      // the live set is driver-counted every round (the stability test),
-      // so the broadcast gate is free: below NodeBroadcastLimit both
-      // membership joins run map-side and the edge relation is never
-      // exchanged (SMJ×2 + shuffle×2 of `und` per round before)
-      val nxt = und
-        .join(gatedBroadcast(live.select(col("node").as("p")), n), Seq("p"))
-        .join(gatedBroadcast(live.select(col("node").as("q")), n), Seq("q"))
-        .groupBy(col("p")).agg(count(lit(1)).as("dg"))
-        .filter(col("dg") >= k).select(col("p").as("node"))
-        .localCheckpoint()
-      val m = nxt.count()
-      stable = m == n
-      live = nxt
-      n = m
+    // the live set is driver-counted every round (the stability test), so
+    // the broadcast gate is free: below the limit both membership joins
+    // run map-side and the edge relation is never exchanged (SMJ×2 +
+    // shuffle×2 of `und` per round before)
+    def members(live: Iterate.Frame): DataFrame = und
+      .join(gatedBroadcast(live.df.select(col("node").as("p")), live.rows), Seq("p"))
+      .join(gatedBroadcast(live.df.select(col("node").as("q")), live.rows), Seq("q"))
+    val (live, _) = Iterate.untilStable("graph_kcore", KcoreMaxRounds,
+        Iterate.checkpoint(deg0.filter(col("dg") >= k).select(col("p").as("node")))) {
+      (live, _) =>
+        val nxt = Iterate.checkpoint(members(live)
+          .groupBy(col("p")).agg(count(lit(1)).as("dg"))
+          .filter(col("dg") >= k).select(col("p").as("node")))
+        (nxt, nxt.rows == live.rows)
     }
-    require(stable, s"k-core did not stabilize in $KcoreMaxRounds rounds " +
-      "— raise KcoreMaxRounds and the oracle unroll together")
-    und.join(gatedBroadcast(live.select(col("node").as("p")), n), Seq("p"))
-      .join(gatedBroadcast(live.select(col("node").as("q")), n), Seq("q"))
+    members(live)
       .groupBy(col("p")).agg(count(lit(1)).as("core_deg"))
       .select(col("p").as("node"), col("core_deg"), lit(k).as("k"))
       .orderBy(col("node"))
@@ -1156,31 +1068,26 @@ object GraphOps {
   /** The LPA round core over a weighted symmetric edge set (src, dst, w) —
     * split out so the spec can drive it with a planted two-clique graph. */
   private[operators] def lpaLabels(edges: DataFrame): DataFrame = {
-    var lbl = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .localCheckpoint()
     // one count of the (constant-cardinality) node set funds the broadcast
     // gate for every round's label join — below the limit the edge
     // relation is never exchanged (the graphKcore device)
-    val nNodes = lbl.count()
-    for (round <- 1 to LpaRounds) {
+    val lbl0 = Iterate.checkpoint(edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl")))
+    Iterate.upTo("lpa", LpaRounds, lbl0) { (lbl, _) =>
       val votes = edges
-        .join(gatedBroadcast(lbl.select(col("node").as("dn"), col("lbl")),
-          nNodes), col("dst") === col("dn"))
+        .join(gatedBroadcast(lbl.df.select(col("node").as("dn"), col("lbl")),
+          lbl.rows), col("dst") === col("dn"))
         .groupBy(col("src"), col("lbl")).agg(sum(col("w")).as("cnt"))
       // weighted mode with min-label tie-break as ONE ordered struct max —
       // no window, no second shuffle beyond the (src, lbl) agg's own
       val pick = votes.groupBy(col("src"))
         .agg(max(struct(col("cnt").as("c"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("src").as("pn"), (-col("m").getField("neg")).as("new_lbl"))
-      val step = lbl.join(gatedBroadcast(pick, nNodes), col("node") === col("pn"),
-          "left")
-        .select(col("node"),
-          coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-      maybeDumpRoundPlan("lpa", round, step)
-      lbl = step.localCheckpoint()
-    }
-    lbl
+      (Iterate.checkpoint(lbl.df.join(gatedBroadcast(pick, lbl.rows),
+          col("node") === col("pn"), "left")
+        .select(col("node"), coalesce(col("new_lbl"), col("lbl")).as("lbl")),
+        lbl.rows), false)
+    }._1.df
   }
 
   /** The strong-tie weighted parts graph shared by graph_label_prop,
@@ -1485,70 +1392,72 @@ object GraphOps {
       .select(col("src").as("u"), col("dst").as("v"), col("w"))
       .localCheckpoint()
 
+  /** Min-label propagation to the component-min fixpoint over a symmetric
+    * edge set (src, dst): (doc_id, cluster_id) for every vertex with an
+    * edge (r4: only those can change label — dedup_clusters runs it over
+    * dup vertices, not the corpus; Borůvka over component links). Each
+    * superstep carries the previous label, so the convergence count reads
+    * the checkpointed output directly. The vertex count is loop-invariant
+    * and gates every round's broadcasts (r15): the edge relation is never
+    * exchanged, and a superstep's only shuffle is the vertex-grain agg. */
+  private[graft] def minLabelCc(sym: DataFrame, tag: String, cap: Int): DataFrame = {
+    val labels0 = Iterate.checkpoint(sym.select(col("src").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("cluster_id")))
+    val (labels, _) = Iterate.untilStable(tag, cap, labels0) { (state, _) =>
+      val labels = state.df.select(col("doc_id"), col("cluster_id"))
+      val nbrMin = sym.join(gatedBroadcast(labels, state.rows),
+          col("dst") === col("doc_id"))
+        .groupBy(col("src")).agg(min(col("cluster_id")).as("nbr_min"))
+      val next = Iterate.checkpoint(labels.join(gatedBroadcast(nbrMin, state.rows),
+          labels("doc_id") === nbrMin("src"), "left")
+        .select(labels("doc_id"), labels("cluster_id").as("old_cluster"),
+          least(labels("cluster_id"),
+            coalesce(col("nbr_min"), labels("cluster_id"))).as("cluster_id")),
+        state.rows)
+      (next, next.df.filter(col("cluster_id") < col("old_cluster")).count() == 0)
+    }
+    labels.df.select(col("doc_id"), col("cluster_id"))
+  }
+
   /** The Borůvka loop over canonical weighted edges — returns the final
     * (node, lbl) component labels and the forest edges (u, v, w). Split
     * out so graph_cluster_agreement can reuse the component structure. */
   private[operators] def boruvka(und: DataFrame): (DataFrame, DataFrame) = {
-    var lbl = und.select(explode(array(col("u"), col("v"))).as("node"))
+    val lbl0 = Iterate.checkpoint(und.select(explode(array(col("u"), col("v"))).as("node"))
       .distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .localCheckpoint()
-    var msf: Option[DataFrame] = None
-    var round = 0
-    var done = false
-    while (!done && round < MstMaxRounds) {
-      round += 1
-      val live = und
+      .select(col("node"), col("node").as("lbl"))).df
+    val ((lbl, msf), _) = Iterate.untilStable("graph_mst", MstMaxRounds,
+        (lbl0, Option.empty[DataFrame])) { case ((lbl, msf), _) =>
+      val live = Iterate.checkpoint(und
         .join(lbl.select(col("node").as("u"), col("lbl").as("cu")), Seq("u"))
         .join(lbl.select(col("node").as("v"), col("lbl").as("cv")), Seq("v"))
-        .filter(col("cu") =!= col("cv"))
-        .localCheckpoint()
-      if (live.isEmpty) done = true
+        .filter(col("cu") =!= col("cv"))).df
+      if (live.isEmpty) ((lbl, msf), true)
       else {
         // best incident edge per component under (w DESC, u ASC, v ASC)
         val cand = live.select(col("cu").as("c"), col("w"), col("u"), col("v"))
           .unionAll(live.select(col("cv").as("c"), col("w"), col("u"), col("v")))
-        val sel = cand.groupBy(col("c"))
+        val sel = Iterate.checkpoint(cand.groupBy(col("c"))
           .agg(max(struct(col("w"),
             (-col("u")).as("nu"), (-col("v")).as("nv"))).as("b"))
           .select(col("b.w").as("w"),
             (-col("b.nu")).as("u"), (-col("b.nv")).as("v"))
-          .select(col("u"), col("v"), col("w")).distinct()
-          .localCheckpoint()
-        msf = Some(msf.map(_.unionAll(sel)).getOrElse(sel).localCheckpoint())
+          .select(col("u"), col("v"), col("w")).distinct()).df
+        val forest = Iterate.checkpoint(msf.fold(sel)(_.unionAll(sel))).df
         // min-label consensus over the component links of selected edges
         val links = live.join(sel.select(col("u"), col("v")), Seq("u", "v"),
             "left_semi")
-          .select(col("cu").as("a"), col("cv").as("b")).distinct()
-        val sym = links.unionAll(links.select(col("b").as("a"), col("a").as("b")))
-          .localCheckpoint()
-        var m = sym.select(col("a").as("c")).distinct()
-          .select(col("c"), col("c").as("m")).localCheckpoint()
-        var iters = 0
-        var stable = false
-        while (!stable && iters < MstMaxCcIters) {
-          iters += 1
-          val nbr = sym.join(m.select(col("c").as("b2"), col("m").as("cand")),
-              col("b") === col("b2"))
-            .select(col("a").as("c"), col("cand"))
-          val nm = m.select(col("c"), col("m").as("cand")).unionAll(nbr)
-            .groupBy(col("c")).agg(min(col("cand")).as("m"))
-            .localCheckpoint()
-          stable = nm.join(m.withColumnRenamed("m", "m0"), Seq("c"))
-            .filter(col("m") =!= col("m0")).isEmpty
-          m = nm
-        }
-        require(stable, s"graph_mst consensus did not stabilize in " +
-          s"$MstMaxCcIters iterations — raise MstMaxCcIters and the oracle " +
-          "unroll together")
-        lbl = lbl.join(m.select(col("c"), col("m").as("nl")),
+          .select(col("cu").as("src"), col("cv").as("dst")).distinct()
+        val sym = Iterate.checkpoint(links.unionAll(
+          links.select(col("dst").as("src"), col("src").as("dst")))).df
+        val m = minLabelCc(sym, "graph_mst_cc", MstMaxCcIters)
+        val next = Iterate.checkpoint(lbl.join(
+            m.select(col("doc_id").as("c"), col("cluster_id").as("nl")),
             col("lbl") === col("c"), "left")
-          .select(col("node"), coalesce(col("nl"), col("lbl")).as("lbl"))
-          .localCheckpoint()
+          .select(col("node"), coalesce(col("nl"), col("lbl")).as("lbl"))).df
+        ((next, Some(forest)), false)
       }
     }
-    require(done, s"graph_mst did not converge in $MstMaxRounds rounds — " +
-      "raise MstMaxRounds and the oracle unroll together")
     (lbl, msf.get)
   }
 

@@ -698,6 +698,9 @@ private class GraftResolvedTable(ident: Identifier, root: String, v: Int)
         override def toV1TableScan[T <: BaseRelation with TableScan](
             context: SQLContext): T =
           new BaseRelation with TableScan {
+            // the scan node prints the relation: the table's name, not an
+            // anonymous class's identity hash (stable plan_fp)
+            override def toString: String = name()
             override def sqlContext: SQLContext = context
             override def schema: StructType = GraftResolvedTable.this.schema()
             override def buildScan(): RDD[Row] =

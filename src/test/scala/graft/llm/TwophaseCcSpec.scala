@@ -35,7 +35,7 @@ class TwophaseCcSpec extends SparkSpec {
     ).map { case (a, b) => (b, a) })                  // feed reversed: order-free
     val two = Dedup.twophaseCc(g).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val one = Dedup.minLabelCc(g).collect()
+    val one = graft.operators.GraphOps.minLabelCc(g, "dedup_cc_minlabel", 64).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toSet
     assert(two == one, s"algorithms disagree: ${two.diff(one)} / ${one.diff(two)}")
     assert(two.count(_._2 == 10L) == 3 && two.count(_._2 == 20L) == 4 &&

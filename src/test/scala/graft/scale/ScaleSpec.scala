@@ -128,4 +128,14 @@ class ScaleSpec extends SparkSpec {
     assert(!plan.contains("Exchange"),
       s"groupBy on the bucket key must run in the scan's own stage:\n$plan")
   }
+
+  test("bucketed tables' scan nodes carry no per-JVM salt") {
+    // plan_fp hashes node names, so a pid in the table name made the
+    // colocated keys' fingerprint differ in every JVM
+    val pid = ProcessHandle.current().pid().toString
+    val scans = ScaleQueries.colocatedJoin(spark, sfDir).queryExecution.sparkPlan
+      .collect { case p if p.nodeName.startsWith("Scan") => p.nodeName }
+    assert(scans.size == 2, scans)
+    assert(scans.forall(n => n.contains("graft_") && !n.contains(pid)), scans)
+  }
 }

@@ -145,6 +145,18 @@ class GraftCatalogSpec extends SparkSpec {
       s"MoR head accepted DML: ${e.getMessage}")
   }
 
+  test("a resolved-table scan node prints the table name, no identity hash") {
+    import spark.implicits._
+    val root = s"$wh/db3/named"
+    VersionedTable.commit(base(), root)
+    VersionedTable.commitDeletes(Seq(1L).toDF("key"), root, "key") // v2: MoR
+    val scans = spark.sql("SELECT * FROM cat.db3.named VERSION AS OF 2")
+      .queryExecution.sparkPlan
+      .collect { case p if p.nodeName.startsWith("Scan") => p.nodeName }
+    assert(scans.nonEmpty && scans.forall(_.contains("named@v2(resolved)")), scans)
+    assert(!scans.exists(_.contains("$anon")), scans)
+  }
+
   test("CTAS: schema-only v1 manifest + data v2, duplicate create refuses (r14)") {
     base().createOrReplaceTempView("ctas_src")
     spark.sql(

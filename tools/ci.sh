@@ -66,6 +66,21 @@ if grep -rnE 'expr\("[^"]*graft_(simhash16|minhash16|dotq|l2q|shingle3|nfc)\(' \
   echo "LINT FAIL: graft function called by SQL name in src/main (use the typed GraftFunctions column)" >&2
   exit 1
 fi
+# One round driver: every checkpointed loop in src/main runs through
+# `graft.Iterate`, which owns the cap failure ("<tag> did not converge in
+# <cap> rounds"). A cap message elsewhere is a hand-rolled loop growing
+# back. Round plans come from `graft.Profile <key>`; the environment
+# switch that used to print them is gone (the bracket keeps this file
+# from matching its own pattern).
+if grep -rnE 'did not (converge|stabilize)' src/main/scala --include='*.scala' \
+    | grep -v '^src/main/scala/graft/Iterate\.scala:'; then
+  echo "LINT FAIL: loop cap failure outside graft/Iterate.scala (run the loop through Iterate.untilStable)" >&2
+  exit 1
+fi
+if grep -rn 'SPARK_GRAFT_ROUND_[P]LANS' src tools; then
+  echo "LINT FAIL: the round-plan environment switch is gone (graft.Profile prints each loop round-1 plan)" >&2
+  exit 1
+fi
 # Window-partition lint (r10 VERDICT item 8): a window partitioned by a
 # known low-cardinality column ALONE, or an unpartitioned Window.orderBy,
 # sorts a fact-sized partition in one task at 100x. Legitimate sites
