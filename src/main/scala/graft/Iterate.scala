@@ -13,13 +13,15 @@ import org.apache.spark.sql.functions.broadcast
   * `"<tag> round <r>"` (Profile's per-job list and round plans read it),
   * and the caller's own description is restored afterwards.
   *
-  * A round's state is checkpointed through [[checkpoint]], so lineage
-  * stays O(1) in the round count; its row count is taken on first read
-  * only, and never when the loop does not read it. */
+  * Round state is checkpointed, so lineage stays O(1) in the round count.
+  * State whose row count the loop reads (a convergence test, a broadcast
+  * gate) goes through [[checkpoint]], which counts it on first read only;
+  * state the loop never counts is a plain `localCheckpoint()`. */
 object Iterate {
 
-  /** A checkpointed loop frame. `rows` counts it on first read, at most
-    * once; a frame whose count the loop already knows never counts. */
+  /** A checkpointed, counted loop frame. `rows` counts it on first read,
+    * at most once; a frame whose count the loop already knows never
+    * counts. */
   final class Frame private[Iterate] (val df: DataFrame, count: () => Long) {
     lazy val rows: Long = count()
   }
@@ -73,17 +75,20 @@ object Iterate {
     (s, rounds)
   }
 
+  /** Rounds name their jobs on the thread's active (else the default)
+    * session's context; with no session there are no jobs to name. */
   private def run[S](tag: String, cap: Int, init: S,
       step: (S, Int) => (S, Boolean)): (S, Int, Boolean) = {
-    val sc = SparkSession.active.sparkContext
-    val caller = sc.getLocalProperty("spark.job.description")
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val caller = sc.map(_.getLocalProperty("spark.job.description")).orNull
     @tailrec def go(s: S, r: Int): (S, Int, Boolean) =
       if (r > cap) (s, cap, false)
       else {
-        sc.setJobDescription(s"$tag round $r")
+        sc.foreach(_.setJobDescription(s"$tag round $r"))
         val (next, done) = step(s, r)
         if (done) (next, r, true) else go(next, r + 1)
       }
-    try go(init, 1) finally sc.setJobDescription(caller)
+    try go(init, 1) finally sc.foreach(_.setJobDescription(caller))
   }
 }

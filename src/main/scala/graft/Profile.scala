@@ -32,10 +32,10 @@ object Profile {
     // of the checkpointed state) never shows. A `graft.Iterate` round
     // describes its jobs "<tag> round <r>", the SQL execution start event
     // carries that description, and its call site names the action.
-    // Taken from the first run that executes the loop (the warmup run for
-    // a loop inside an `Artifacts.derive` build).
+    // Taken per key from the first run that executes the loop (the warmup
+    // run for a loop inside an `Artifacts.derive` build; a build an earlier
+    // key of the same invocation already ran is a cache hit and shows none).
     val roundPlans = scala.collection.mutable.LinkedHashMap[String, String]()
-    var shownPlans = 0
     val RoundOne = "(.+) round 1".r
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -79,7 +79,8 @@ object Profile {
     }
 
     args.foreach { name =>
-      writes.clear()
+      // the previous key's last write trailed all of its events
+      writes.clear(); roundPlans.synchronized(roundPlans.clear())
       once(name) // warmup
       val t1 = once(name)
       // a run's write event trails all of its job events: drain the first
@@ -94,10 +95,9 @@ object Profile {
         println(f"    job $id%3d ${dur}%7.2fs  $desc")
       }
       last.foreach(qe => println(qe.explainString(FormattedMode)))
-      roundPlans.synchronized(roundPlans.toSeq).drop(shownPlans).foreach {
+      roundPlans.synchronized(roundPlans.toSeq).foreach {
         case (tag, plan) => println(s"===== per-round plan: $tag round 1 =====\n$plan")
       }
-      shownPlans = roundPlans.synchronized(roundPlans.size)
     }
     spark.stop()
   }

@@ -809,14 +809,14 @@ object Similarity {
         .groupBy(col("vec_id"), col("m"))
         .agg(min(struct(col("d"), col("cell"))).as("best"),
           first(col("sv")).as("sv"))
-      (Iterate.checkpoint(assigned
+      (assigned
         .select(col("best.cell").as("cell"), col("m"),
           posexplode(col("sv")).as(Seq("pos", "v")))
         .groupBy(col("cell"), col("m"), col("pos"))
         .agg(expr("sum(v) div count(1)").as("cd"))
         .groupBy(col("cell"), col("m"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, cd))), x -> x.cd)")
-          .as("cvec"))).df, false)
+          .as("cvec")).localCheckpoint(), false)
     }._1
 
   /** Nearest-sub-centroid code per (vector, subspace) — the encode
@@ -1557,7 +1557,7 @@ object Similarity {
     * frame (query_id, node) — shared by the single-layer NSW key (global
     * min-id entry) and the 2-layer HNSW key (layer-1-routed entries).
     * Returns the scored visited set (query_id, node, cos). */
-  private def beamWalk(corpus: DataFrame, queries: DataFrame,
+  private def beamWalk(tag: String, corpus: DataFrame, queries: DataFrame,
       edges: DataFrame, entry: DataFrame, hops: Int, beam: Int): DataFrame = {
     require(hops <= NswMaxHops && beam <= NswMaxBeam,
       s"walk budget ($hops hops, $beam beam) exceeds the oracle unroll " +
@@ -1574,16 +1574,16 @@ object Similarity {
               sqrt(col("nrm").cast("double")))).as("cos"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("node"))
-    val visited0 = Iterate.checkpoint(score(entry)).df
-    Iterate.upTo("beam_walk", hops,
+    val visited0 = score(entry).localCheckpoint()
+    Iterate.upTo(tag, hops,
         (visited0, visited0.select(col("query_id"), col("node")))) {
       case ((visited, frontier), _) =>
         val cand = frontier.join(edges, frontier("node") === edges("src"))
           .select(col("query_id"), col("dst").as("node")).distinct()
           .join(visited.select(col("query_id"), col("node")),
             Seq("query_id", "node"), "left_anti")
-        val scored = Iterate.checkpoint(score(cand)).df // per-hop walk state
-        ((Iterate.checkpoint(visited.union(scored)).df,
+        val scored = score(cand).localCheckpoint() // per-hop walk state
+        ((visited.union(scored).localCheckpoint(),
           scored.withColumn("rn", row_number().over(wq))
             .filter(col("rn") <= beam).select(col("query_id"), col("node"))),
           false)
@@ -1618,7 +1618,7 @@ object Similarity {
         col("nrm").as("q_nrm"))
     val entry = queries.select(col("query_id"))
       .crossJoin(broadcast(corpus.agg(min(col("vec_id")).as("node"))))
-    val visited = beamWalk(corpus, queries, edges, entry, hops, beam)
+    val visited = beamWalk("beam_walk", corpus, queries, edges, entry, hops, beam)
     (visited, walkTop5(visited))
   }
 
@@ -1751,12 +1751,12 @@ object Similarity {
         col("nrm").as("q_nrm"))
     val entry1 = queries.select(col("query_id"))
       .crossJoin(broadcast(l1.agg(min(col("vec_id")).as("node"))))
-    val visited1 = beamWalk(corpus, queries, edges1, entry1, h1, b1)
+    val visited1 = beamWalk("beam_walk_l1", corpus, queries, edges1, entry1, h1, b1)
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("node"))
     val entry0 = visited1.withColumn("rn", row_number().over(wq))
       .filter(col("rn") === 1).select(col("query_id"), col("node"))
-    val visited0 = beamWalk(corpus, queries, edges0, entry0, h0, b0)
+    val visited0 = beamWalk("beam_walk_l0", corpus, queries, edges0, entry0, h0, b0)
     (visited1, visited0, walkTop5(visited0))
   }
 
@@ -2022,7 +2022,7 @@ object Similarity {
             s"max_by(cand, CAST(rel - maxsim AS DECIMAL(38,0)) * $MmrComposite - cand)")
             .as("cand"))
           .withColumn("pick", lit(round + 1))
-        (Iterate.checkpoint(picked.unionAll(next)).df, false)
+        (picked.unionAll(next).localCheckpoint(), false)
     }
     selected.join(cands.select(col("query_id"), col("cand"), col("rel")),
         Seq("query_id", "cand"))

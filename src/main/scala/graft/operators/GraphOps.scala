@@ -127,7 +127,7 @@ object GraphOps {
       ((1 to maxRounds).foldLeft(rank0)((rank, _) =>
         step(edges, deg, rank).select(col("node"), col("r"))), maxRounds)
     else Iterate.untilStable("pagerank", maxRounds, rank0) { (rank, _) =>
-      val next = Iterate.checkpoint(step(edges, deg, rank)).df
+      val next = step(edges, deg, rank).localCheckpoint()
       val delta = next.agg(max(abs(col("r") - col("rp")))).collect()(0).getLong(0)
       (next.select(col("node"), col("r")), delta <= tol)
     }
@@ -1423,38 +1423,38 @@ object GraphOps {
     * (node, lbl) component labels and the forest edges (u, v, w). Split
     * out so graph_cluster_agreement can reuse the component structure. */
   private[operators] def boruvka(und: DataFrame): (DataFrame, DataFrame) = {
-    val lbl0 = Iterate.checkpoint(und.select(explode(array(col("u"), col("v"))).as("node"))
+    val lbl0 = und.select(explode(array(col("u"), col("v"))).as("node"))
       .distinct()
-      .select(col("node"), col("node").as("lbl"))).df
+      .select(col("node"), col("node").as("lbl")).localCheckpoint()
     val ((lbl, msf), _) = Iterate.untilStable("graph_mst", MstMaxRounds,
         (lbl0, Option.empty[DataFrame])) { case ((lbl, msf), _) =>
-      val live = Iterate.checkpoint(und
+      val live = und
         .join(lbl.select(col("node").as("u"), col("lbl").as("cu")), Seq("u"))
         .join(lbl.select(col("node").as("v"), col("lbl").as("cv")), Seq("v"))
-        .filter(col("cu") =!= col("cv"))).df
+        .filter(col("cu") =!= col("cv")).localCheckpoint()
       if (live.isEmpty) ((lbl, msf), true)
       else {
         // best incident edge per component under (w DESC, u ASC, v ASC)
         val cand = live.select(col("cu").as("c"), col("w"), col("u"), col("v"))
           .unionAll(live.select(col("cv").as("c"), col("w"), col("u"), col("v")))
-        val sel = Iterate.checkpoint(cand.groupBy(col("c"))
+        val sel = cand.groupBy(col("c"))
           .agg(max(struct(col("w"),
             (-col("u")).as("nu"), (-col("v")).as("nv"))).as("b"))
           .select(col("b.w").as("w"),
             (-col("b.nu")).as("u"), (-col("b.nv")).as("v"))
-          .select(col("u"), col("v"), col("w")).distinct()).df
-        val forest = Iterate.checkpoint(msf.fold(sel)(_.unionAll(sel))).df
+          .select(col("u"), col("v"), col("w")).distinct().localCheckpoint()
+        val forest = msf.fold(sel)(_.unionAll(sel)).localCheckpoint()
         // min-label consensus over the component links of selected edges
         val links = live.join(sel.select(col("u"), col("v")), Seq("u", "v"),
             "left_semi")
           .select(col("cu").as("src"), col("cv").as("dst")).distinct()
-        val sym = Iterate.checkpoint(links.unionAll(
-          links.select(col("dst").as("src"), col("src").as("dst")))).df
+        val sym = links.unionAll(
+          links.select(col("dst").as("src"), col("src").as("dst"))).localCheckpoint()
         val m = minLabelCc(sym, "graph_mst_cc", MstMaxCcIters)
-        val next = Iterate.checkpoint(lbl.join(
+        val next = lbl.join(
             m.select(col("doc_id").as("c"), col("cluster_id").as("nl")),
             col("lbl") === col("c"), "left")
-          .select(col("node"), coalesce(col("nl"), col("lbl")).as("lbl"))).df
+          .select(col("node"), coalesce(col("nl"), col("lbl")).as("lbl")).localCheckpoint()
         ((next, Some(forest)), false)
       }
     }

@@ -13,10 +13,11 @@ object Scale {
     * the same way join with NO shuffle (bucket-local sort-merge): the
     * exchange is paid once at write time, then every subsequent join of the
     * co-bucketed tables is free. This is the batch analog of co-partitioned
-    * state in a streaming join. */
+    * state in a streaming join. The files go under `path`, so the table
+    * name need not be unique to keep two JVMs' warehouses apart. */
   def writeBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite).format("parquet")
+      buckets: Int, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).format("parquet").option("path", path)
       .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
 
   /** Salted equi-join for skewed keys: the big side gets a deterministic

@@ -1,6 +1,6 @@
 package graft.scale
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
@@ -51,11 +51,9 @@ object ScaleQueries {
         s"/graft_bucketed_p${ProcessHandle.current().pid()}"
       sys.addShutdownHook(graft.sink.Sinks.deleteDir(root))
       def stage(df: DataFrame, t: String, key: String): String = {
-        val path = s"$root/$t"
         s.sql(s"DROP TABLE IF EXISTS $t")
-        graft.sink.Sinks.deleteDir(path)
-        df.write.mode(SaveMode.Overwrite).format("parquet").option("path", path)
-          .bucketBy(8, key).sortBy(key).saveAsTable(t)
+        graft.sink.Sinks.deleteDir(s"$root/$t")
+        Scale.writeBucketed(df, t, key, 8, s"$root/$t")
         t
       }
       (stage(Tables.load(s, dir, "orders")

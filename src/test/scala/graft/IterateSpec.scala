@@ -16,9 +16,6 @@ import graft.operators.GraphOps
   * round and row counts on a planted chain, and the round job names. */
 class IterateSpec extends SparkSpec {
 
-  // the driver names each round's jobs on the active session's context
-  override def beforeAll(): Unit = { super.beforeAll(); spark }
-
   test("an until-stable loop that reaches its cap fails, naming tag and cap") {
     var rounds = 0
     val e = intercept[IllegalArgumentException] {

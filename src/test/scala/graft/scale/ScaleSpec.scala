@@ -13,15 +13,15 @@ class ScaleSpec extends SparkSpec {
     val lineitem = Tables.load(spark, sfDir, "lineitem")
     // a fresh metastore + a leftover warehouse dir from a previous JVM
     // collide on LOCATION_ALREADY_EXISTS: drop both first
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     for (t <- Seq("orders_b", "lineitem_b")) {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      graft.sink.Sinks.deleteDir(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") + s"/$t")
+      graft.sink.Sinks.deleteDir(s"$wh/$t")
     }
     Scale.writeBucketed(orders.select("o_orderkey", "o_totalprice"),
-      "orders_b", "o_orderkey", 8)
+      "orders_b", "o_orderkey", 8, s"$wh/orders_b")
     Scale.writeBucketed(lineitem.select("l_orderkey", "l_extendedprice"),
-      "lineitem_b", "l_orderkey", 8)
+      "lineitem_b", "l_orderkey", 8, s"$wh/lineitem_b")
 
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
