@@ -209,7 +209,7 @@ object Dedup {
     val root = graft.Artifacts.derive("lsh", s"$dir/documents.parquet") { r =>
       lshVerified(load(s, dir, "documents")).write.parquet(s"$r/verified")
     }
-    s.read.parquet(s"$root/verified")
+    graft.Artifacts.read(s, s"$root/verified")
   }
 
   /** The banded candidate generation + exact verify, UNFILTERED — the

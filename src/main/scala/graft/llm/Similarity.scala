@@ -883,12 +883,12 @@ object Similarity {
       cb.write.parquet(s"$tmp/cb")
       pqEncode(sub, cb).write.parquet(s"$tmp/codes")
     }
-    val cb = s.read.parquet(s"$root/cb")
+    val cb = graft.Artifacts.read(s, s"$root/cb")
     val qsub = pqSub(s, dir, mCount = 16, subDim = 4)
       .filter(col("vec_id") < AnnQueryCount)
     val dtab = pqDists(qsub, cb)
       .select(col("vec_id").as("query_id"), col("m"), col("cell"), col("d"))
-    pqAdcTopk(s.read.parquet(s"$root/codes"), dtab)
+    pqAdcTopk(graft.Artifacts.read(s, s"$root/codes"), dtab)
   }
 
   // ---- sim_ivfpq ------------------------------------------------------------
@@ -979,9 +979,9 @@ object Similarity {
       cb.write.parquet(s"$tmp/cb")
       codes.write.parquet(s"$tmp/codes")
     }
-    val cent = s.read.parquet(s"$root/cent")
-    val cb = s.read.parquet(s"$root/cb")
-    val codes = s.read.parquet(s"$root/codes")
+    val cent = graft.Artifacts.read(s, s"$root/cent")
+    val cb = graft.Artifacts.read(s, s"$root/cb")
+    val codes = graft.Artifacts.read(s, s"$root/codes")
     // probes: the nprobe nearest cells PER QUERY — scored over the QUERY
     // set only (10 × 10 rows; the one window here runs over queries)
     val wP = Window.partitionBy(col("vec_id"))

@@ -17,8 +17,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+  /** The `name` table under `dir`, read once per session through
+    * `Artifacts.read` and served again while its files are unchanged. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.Artifacts.read(spark, s"$dir/$name.parquet",
+      if (name == "events") normalizeTs else identity)
+
+  private def normalizeTs(df: DataFrame): DataFrame =
     // events.ts has shipped in three parquet vintages, and an engine must
     // read any writer's files (the reference learned the same lesson at the
     // value layer — etl_final_fix.py:23-31 exists because ISO-format drift
@@ -33,12 +38,11 @@ object Tables {
     //    set inferTimestampNTZ.enabled=false so new sessions never see NTZ,
     //    but the cast keeps load correct under default configs too.
     //  - tagged timestamp[us]: already TimestampType, pass through.
-    if (name == "events") df.schema("ts").dataType match {
+    df.schema("ts").dataType match {
       case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
       case _                => df
-    } else df
-  }
+    }
 
   /** Register every testdata table as a temp view so `spark.sql` query text
     * can be submitted directly (the reference ships SQL text to BigQuery —

@@ -764,24 +764,16 @@ object Analytics {
   // carries the partition-column predicate, so the scan's file index prunes
   // to the one (or two) month directories BEFORE reading any data. The
   // oracle states the identical answer from the FLAT table: layout must
-  // never change results, only the files touched. The layout is written
-  // once per (JVM, sf) under a pid-scoped root — the same no-cross-JVM-
-  // clobber rule as StreamQueries.initRoot.
-  private val partLock = new Object
+  // never change results, only the files touched. The layout is a derived
+  // artifact of lineitem, rebuilt when lineitem's fingerprint changes.
   private[graft] def lineitemByMonth(s: SparkSession, dir: String): String =
-    partLock.synchronized {
-      val sf = new java.io.File(dir).getName
-      val path = s"${sys.props("java.io.tmpdir")}/graft_part_" +
-        s"${ProcessHandle.current().pid()}/$sf/lineitem_by_month"
-      if (!new java.io.File(path, "_SUCCESS").exists()) {
-        lineitem(s, dir)
-          .select(col("l_orderkey"), col("l_linenumber"),
-            col("l_shipdate").cast("date").as("ship_date"))
-          .withColumn("ship_month", date_format(col("ship_date"), "yyyy-MM"))
-          .write.mode("overwrite").partitionBy("ship_month").parquet(path)
-      }
-      path
-    }
+    graft.Artifacts.derive("lineitem_by_month", s"$dir/lineitem.parquet") { r =>
+      lineitem(s, dir)
+        .select(col("l_orderkey"), col("l_linenumber"),
+          col("l_shipdate").cast("date").as("ship_date"))
+        .withColumn("ship_month", date_format(col("ship_date"), "yyyy-MM"))
+        .write.partitionBy("ship_month").parquet(s"$r/layout")
+    } + "/layout"
 
   /** One scalar action anchors the literal date (same pattern as the
     * snapshot compares); the partitioned read then has static literal
@@ -790,9 +782,9 @@ object Analytics {
     lineitem(s, dir).agg(max(col("l_shipdate").cast("date"))).head.getDate(0)
 
   def filterDateEqPart(s: SparkSession, dir: String): DataFrame = {
-    val path = lineitemByMonth(s, dir)
+    val layout = graft.Artifacts.read(s, lineitemByMonth(s, dir))
     val d = maxShipDate(s, dir)
-    s.read.parquet(path)
+    layout
       .filter(col("ship_month") === d.toString.substring(0, 7) &&
         col("ship_date") === lit(d))
       .select(col("l_orderkey"), col("l_linenumber"), col("ship_date"))
@@ -800,11 +792,11 @@ object Analytics {
   }
 
   def filterDateRangePart(s: SparkSession, dir: String): DataFrame = {
-    val path = lineitemByMonth(s, dir)
+    val layout = graft.Artifacts.read(s, lineitemByMonth(s, dir))
     val d = maxShipDate(s, dir)
     val lo = java.sql.Date.valueOf(d.toLocalDate.minusDays(30))
     val months = Seq(lo.toString.substring(0, 7), d.toString.substring(0, 7)).distinct
-    s.read.parquet(path)
+    layout
       .filter(col("ship_month").isin(months: _*) && col("ship_date") >= lit(lo))
       .select(col("l_orderkey"), col("l_linenumber"), col("ship_date"))
       .orderBy(col("l_orderkey"), col("l_linenumber"))

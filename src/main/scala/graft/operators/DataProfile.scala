@@ -979,8 +979,8 @@ object DataProfile {
           when(col("o_orderstatus") === "O", lit("keep")).otherwise(lit("drop")))
         .write.parquet(s"$b/dim")
     }
-    val fact = s.read.parquet(s"$base/fact")
-    val dim = s.read.parquet(s"$base/dim").filter(col("tag") === "keep")
+    val fact = graft.Artifacts.read(s, s"$base/fact")
+    val dim = graft.Artifacts.read(s, s"$base/dim").filter(col("tag") === "keep")
     fact.join(broadcast(dim), Seq("o_orderstatus"))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),

@@ -82,8 +82,8 @@ object GraphOps {
         .write.parquet(s"$tmp/nodes")
       edges.unpersist(blocking = false)
     }
-    (s.read.parquet(s"$root/edges"), s.read.parquet(s"$root/deg"),
-      s.read.parquet(s"$root/nodes"))
+    (graft.Artifacts.read(s, s"$root/edges"), graft.Artifacts.read(s, s"$root/deg"),
+      graft.Artifacts.read(s, s"$root/nodes"))
   }
 
   /** One power-method superstep: join ranks onto edges by src (messages),
@@ -355,7 +355,7 @@ object GraphOps {
     }
     val n = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/edge_count")).trim.toLong
-    (s.read.parquet(s"$root/oriented"), n)
+    (graft.Artifacts.read(s, s"$root/oriented"), n)
   }
 
   /** Degree-oriented per-node triangle counts from a (p1 < p2) distinct
@@ -1120,7 +1120,7 @@ object GraphOps {
         .filter(col("w") >= LpaMinWeight)
       edges.write.parquet(s"$r/edges")
     }
-    s.read.parquet(s"$root/edges")
+    graft.Artifacts.read(s, s"$root/edges")
   }
 
   /** The LPA labelling of the strong-tie graph as a derived artifact —
@@ -1130,7 +1130,7 @@ object GraphOps {
     val root = graft.Artifacts.derive("lpa", s"$dir/lineitem.parquet") { r =>
       lpaLabels(strongTieEdges(s, dir)).write.parquet(s"$r/lbl")
     }
-    s.read.parquet(s"$root/lbl")
+    graft.Artifacts.read(s, s"$root/lbl")
   }
 
   /** Borůvka component labels + forest edges of the strong-tie graph as
@@ -1143,7 +1143,7 @@ object GraphOps {
       lbl.write.parquet(s"$r/lbl")
       forest.write.parquet(s"$r/forest")
     }
-    (s.read.parquet(s"$root/lbl"), s.read.parquet(s"$root/forest"))
+    (graft.Artifacts.read(s, s"$root/lbl"), graft.Artifacts.read(s, s"$root/forest"))
   }
 
   /** The same graph as DuckDB CTEs (ew = symmetric directed strong ties). */

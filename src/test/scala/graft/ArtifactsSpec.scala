@@ -1,13 +1,23 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.functions.col
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+
+import graft.model.Tables
 
 /** `Artifacts.derive`: one key rule, one superseded-root policy, nested
-  * builds, and the reentrant build meter. */
-class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
+  * builds, and the reentrant build meter. `Artifacts.read`: one relation
+  * per (session, path) while the fingerprint holds. */
+class ArtifactsSpec extends SparkSpec {
   private val sources = scala.collection.mutable.ListBuffer[Path]()
 
   /** A parquet-shaped source: a directory holding one part file. */
@@ -107,5 +117,119 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(root.nonEmpty && !exists(root))
     assert(exists(Artifacts.derive("boom", src) { _ => () }))
+  }
+
+  /** A parquet table `t.parquet` of (k, v) rows under a fresh directory. */
+  private def table(rows: (Int, String)*): Path = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_read_spec")
+    sources += dir
+    rows.toDF("k", "v").coalesce(1).write.parquet(s"$dir/t.parquet")
+    dir
+  }
+
+  private def rowsOf(df: DataFrame): Seq[(Int, String)] =
+    df.collect().map(r => (r.getInt(0), r.getString(1))).toSeq.sortBy(_._1)
+
+  /** Descriptions of the jobs `work` submits, the listener bus drained. */
+  private def jobsOf(work: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("probe")
+      work
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      eventually(timeout(30.seconds)) { assert(seen.contains("marker")) }
+      seen.asScala.toSeq.filter(_ == "probe")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
+  }
+
+  test("a second read of an unchanged path submits no Spark job") {
+    val path = s"${table(1 -> "a", 2 -> "b")}/t.parquet"
+    assert(jobsOf(Artifacts.read(spark, path)).nonEmpty,
+      "the first read infers the schema with a job")
+    var again: DataFrame = null
+    assert(jobsOf { again = Artifacts.read(spark, path) }.isEmpty)
+    assert(again eq Artifacts.read(spark, path))
+  }
+
+  test("an in-place rewrite with a changed size returns the new rows") {
+    val dir = table(1 -> "a", 2 -> "b")
+    val path = s"$dir/t.parquet"
+    assert(rowsOf(Artifacts.read(spark, path)) == Seq(1 -> "a", 2 -> "b"))
+    // the same part-file name (and checksum sidecar), new bytes, every
+    // mtime put back
+    def files(p: String) = Files.list(Paths.get(p)).iterator.asScala
+      .filter(_.getFileName.toString.contains("part-")).toSeq.sortBy(_.getFileName.toString)
+    val old = files(path)
+    val times = (old :+ Paths.get(path)).map(p => p -> Files.getLastModifiedTime(p))
+    // (a new column too: a reused relation would keep the old schema)
+    val other = {
+      import spark.implicits._
+      val d = Files.createTempDirectory("graft_read_spec")
+      sources += d
+      Seq((1, "a", 10L), (3, "c", 30L)).toDF("k", "v", "w")
+        .coalesce(1).write.parquet(s"$d/t.parquet")
+      files(s"$d/t.parquet")
+    }
+    assert(old.size == 2 && other.size == 2 &&
+      Files.size(other.last) != Files.size(old.last))
+    old.zip(other).foreach { case (o, n) =>
+      Files.copy(n, o, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    times.foreach { case (p, t) => Files.setLastModifiedTime(p, t) }
+    val fresh = Artifacts.read(spark, path)
+    assert(fresh.columns.toSeq == Seq("k", "v", "w"))
+    assert(fresh.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+      .toSeq.sortBy(_._1) == Seq((1, "a", 10L), (3, "c", 30L)))
+  }
+
+  test("two sessions get distinct frames") {
+    val path = s"${table(1 -> "a")}/t.parquet"
+    val other = spark.newSession()
+    val mine = Artifacts.read(spark, path)
+    val theirs = Artifacts.read(other, path)
+    assert(!(mine eq theirs))
+    assert((mine.sparkSession eq spark) && (theirs.sparkSession eq other))
+    assert(Artifacts.read(other, path) eq theirs)
+  }
+
+  test("two loads of one table join through aliased columns") {
+    val dir = table(1 -> "x", 2 -> "y", 2 -> "z", 3 -> "w").toString
+    val a = Tables.load(spark, dir, "t").as("a")
+    val b = Tables.load(spark, dir, "t").as("b")
+    val got = a.join(b, col("a.k") === col("b.k") && col("a.v") < col("b.v"))
+      .select(col("a.k"), col("a.v"), col("b.v")).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
+    assert(got == Seq((2, "y", "z")))
+  }
+
+  test("the same join through Dataset column references fails to resolve " +
+      "instead of returning wrong rows") {
+    val dir = table(1 -> "x", 2 -> "y", 2 -> "z", 3 -> "w").toString
+    val a = Tables.load(spark, dir, "t")
+    val b = Tables.load(spark, dir, "t")
+    intercept[AnalysisException] {
+      a.join(b, a("k") === b("k") && a("v") < b("v")).collect()
+    }
+  }
+
+  test("a warm re-run of profile_columns compiles no new class") {
+    def run() = graft.operators.DataProfile.profileColumns(spark, sfDir).collect()
+    val first = run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(run().toSeq == first.toSeq)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "the warm run recompiled generated classes")
   }
 }

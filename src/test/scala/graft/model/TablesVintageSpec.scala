@@ -77,8 +77,9 @@ class TablesVintageSpec extends SparkSpec {
       assert(rowsOf(got) == expected)
     } finally spark.conf.set(key, saved)
     // And under the repo's pinned config the reader maps the file straight
-    // to TIMESTAMP — passthrough branch, same rows.
-    val got2 = loadEvents(dir)
+    // to TIMESTAMP — passthrough branch, same rows. A new session, because
+    // this one keeps the relation it read under the flipped inference.
+    val got2 = Tables.load(spark.newSession(), dir, "events")
     assert(got2.schema("ts").dataType == TimestampType)
     assert(rowsOf(got2) == expected)
   }

@@ -105,6 +105,26 @@ class SinksSpec extends SparkSpec {
     assert(df.exceptAll(flat).isEmpty && flat.exceptAll(df).isEmpty)
   }
 
+  test("filter_date_eq_part gives two data dirs with the same leaf name " +
+      "their own month layout") {
+    import graft.operators.Analytics
+    import spark.implicits._
+    val root = freshDir("same_leaf")
+    val d = java.sql.Date.valueOf("2024-03-05")
+    def stage(side: String, rows: (Long, Int, java.sql.Date)*): String = {
+      val dir = s"$root/$side/tables"
+      rows.toDF("l_orderkey", "l_linenumber", "l_shipdate")
+        .write.parquet(s"$dir/lineitem.parquet")
+      dir
+    }
+    val a = stage("a", (1L, 1, d), (2L, 1, d))
+    val b = stage("b", (7L, 1, d), (8L, 2, d), (9L, 1, java.sql.Date.valueOf("2024-02-01")))
+    def keys(dir: String) = Analytics.filterDateEqPart(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+    assert(keys(a) == Seq((1L, 1), (2L, 1)))
+    assert(keys(b) == Seq((7L, 1), (8L, 2)), "served the other dir's layout")
+  }
+
   test("filter_date_range_part touches at most the two boundary months") {
     import graft.operators.Analytics
     val maxD = spark.read.parquet(s"$sfDir/lineitem.parquet")

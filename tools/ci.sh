@@ -45,6 +45,21 @@ if grep -rn 'createTempDirectory' src/main/scala --include='*.scala' \
   echo "LINT FAIL: createTempDirectory outside graft/Artifacts.scala (derive the artifact through Artifacts.derive)" >&2
   exit 1
 fi
+# One parquet loader for the tables and the derived-artifact roots:
+# `Artifacts.read` serves each (session, path) frame while its fingerprint
+# holds, so a warm key re-runs no schema-inference job. A direct read of
+# an artifact root, or in the table loader, is a second loader growing
+# back. Streaming sources that take their schema from a per-run staged
+# fixture (`readStream.schema(...)`) are not artifact roots.
+if grep -rnE '\.read\.parquet\(s"\$(root|base)/' src/main/scala --include='*.scala' \
+    | grep -v '^src/main/scala/graft/Artifacts\.scala:' | grep -v 'readStream\.schema('; then
+  echo "LINT FAIL: parquet read of a derived-artifact root outside graft/Artifacts.scala (read it through Artifacts.read)" >&2
+  exit 1
+fi
+if grep -n '\.read\.parquet' src/main/scala/graft/model/Tables.scala; then
+  echo "LINT FAIL: .read.parquet in graft/model/Tables.scala (load the table through Artifacts.read)" >&2
+  exit 1
+fi
 # One session recipe: every SparkSession in src/main is built by
 # `graft.Session.local`, so no main measures a session the others don't.
 if grep -rn 'SparkSession\.builder' src/main/scala --include='*.scala' \
