@@ -2,8 +2,10 @@ package graft.flatten
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
+import graft.expressions.ColumnPick
 import graft.functions.Scalars._
 
 /** The reference's core transform: nested Monday.com GraphQL JSON → 5 typed
@@ -13,12 +15,15 @@ import graft.functions.Scalars._
   * explicit schema pruned to the fields its columns read (`docSchema`
   * narrowed per table; the embedded `value` JSON stays an opaque string), a
   * board's page files scan in one task per split, `explode` walks
-  * boards→items→subitems, and each output column is a declarative
-  * filter-first-nonempty over the `column_values` array — the per-column
-  * dispatch maps of the reference become `Map[String, Column => Column]`
-  * config, not imperative loops. Everything stays inside whole-stage codegen;
-  * at 100 TB the raw documents would be a date-partitioned table of JSON
-  * strings and this exact plan applies per partition with no shuffle at all
+  * boards→items→subitems, and each output column is one first-(or last-)
+  * non-empty pick over the `column_values` array — the per-column dispatch
+  * maps of the reference become `Map[String, Column => Column]` config, not
+  * imperative loops. The pick is the native `ColumnPick` expression, not a
+  * `filter` lambda (a `CodegenFallback`), so each table's projection runs in
+  * the same whole-stage-codegen stage as the `explode` below it (FlattenSpec
+  * checks every table's executed plan); at 100 TB the raw documents would
+  * be a date-partitioned table of JSON strings and this exact plan applies
+  * per partition with no shuffle at all
   * (parent-child denormalization is free: the explode carries parent columns).
   *
   * Pinned semantics reproduced exactly (and asserted in FlattenSpec):
@@ -124,11 +129,16 @@ object Flatten {
         explode(col("board.items_page.items")).as("item"))
 
   // ---- column-dispatch primitives ------------------------------------------
+  /** The pick every helper below plants: one `ColumnPick` over the array
+    * (see graft.expressions), which stays inside whole-stage codegen. */
+  private def pick(cvs: Column, matchPath: Seq[String], key: String,
+      field: String = "text", firstWins: Boolean = true,
+      grammar: Option[String] = None): Column =
+    ColumnBridge.column(ColumnPick(ColumnBridge.expression(cvs), matchPath, key,
+      field, firstWins, grammar))
+
   /** First column_values entry with this id and non-empty text → its text. */
-  private def cvText(cvs: Column, id: String): Column =
-    try_element_at(filter(cvs, c =>
-      c.getField("id") === id && c.getField("text").isNotNull &&
-        length(c.getField("text")) > 0), lit(1)).getField("text")
+  private def cvText(cvs: Column, id: String): Column = pick(cvs, Seq("id"), id)
 
   /** Same, dispatched on column.type (subitem boards carry metadata).
     *
@@ -138,10 +148,7 @@ object Flatten {
     * `monday_etl_automated.py:305-322`). `firstWins` selects which end. */
   private def cvTextByType(cvs: Column, tpe: String,
       firstWins: Boolean = false): Column =
-    try_element_at(filter(cvs, c =>
-      c.getField("column").getField("type") === tpe &&
-        c.getField("text").isNotNull && length(c.getField("text")) > 0),
-      lit(if (firstWins) 1 else -1)).getField("text")
+    pick(cvs, Seq("column", "type"), tpe, firstWins = firstWins)
 
   /** Numbers-typed dispatch carries one more reference quirk: the loop only
     * overwrites when `float(text)` SUCCEEDS (`try/except pass`,
@@ -161,17 +168,12 @@ object Flatten {
   private[flatten] val NumberGrammar = "^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)$"
 
   private def cvNumbersText(cvs: Column): Column =
-    try_element_at(filter(cvs, c =>
-      c.getField("column").getField("type") === "numbers" &&
-        c.getField("text").isNotNull && length(c.getField("text")) > 0 &&
-        c.getField("text").rlike(NumberGrammar)),
-      lit(-1)).getField("text")
+    pick(cvs, Seq("column", "type"), "numbers", firstWins = false,
+      grammar = Some(NumberGrammar))
 
   /** The raw value JSON of the first non-empty-text entry with this id. */
   private def cvValue(cvs: Column, id: String): Column =
-    try_element_at(filter(cvs, c =>
-      c.getField("id") === id && c.getField("text").isNotNull &&
-        length(c.getField("text")) > 0), lit(1)).getField("value")
+    pick(cvs, Seq("id"), id, field = "value")
 
   private def linkedCols(cvs: Column, relId: String): Seq[Column] = Seq(
     linkedPulseId(cvValue(cvs, relId)).as("linked_subitem_id"),

@@ -141,7 +141,7 @@ object SessionStream {
     ev.filter(col("ts") >= "2024-01-16").coalesce(1)
       .write.mode("append").parquet(src)
 
-    val streamed = s.readStream.schema(s.read.parquet(src).schema)
+    val streamed = s.readStream.schema(StreamQueries.stagedSchema(ev))
       .option("maxFilesPerTrigger", "1").parquet(src)
       .as[SessionEvent]
     val table = s"stream_session_state_$id"

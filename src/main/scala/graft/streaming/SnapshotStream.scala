@@ -43,21 +43,32 @@ object SnapshotStream {
     * changed, so alert rules see exactly the fresh snapshots AND the
     * watermark actually purges closed-window state — in `complete` mode the
     * store would retain every window forever, unbounded on a continuous
-    * 100 TB deployment. */
+    * 100 TB deployment.
+    *
+    * One micro-batch a run: the query starts with no-data micro-batches off.
+    * In update mode the no-data batch Spark would run after the data batch
+    * emits nothing; it only evicts the windows the advanced watermark
+    * closed. Those are now evicted by the next run's data batch, which
+    * runs under the same watermark, so the alerts are the same and the
+    * state still holds only the windows inside the watermark horizon plus
+    * the ones one run behind. */
   def runAvailableNow(
       agg: DataFrame, checkpoint: String, alertMinRows: Long)(
       onAlert: Seq[String] => Unit): StreamingQuery = {
-    val q = agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val alerts = batch.filter(col("n_rows") < alertMinRows)
-          .collect()
-          .map(r => s"low_rows:${r.getAs[java.sql.Date]("snapshot_day")}:${r.getAs[Long]("n_rows")}")
-        onAlert(alerts.toSeq)
-      }
-      .start()
+    val q = StreamQueries.withStartConf(agg.sparkSession,
+        "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+      agg.writeStream
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val alerts = batch.filter(col("n_rows") < alertMinRows)
+            .collect()
+            .map(r => s"low_rows:${r.getAs[java.sql.Date]("snapshot_day")}:${r.getAs[Long]("n_rows")}")
+          onAlert(alerts.toSeq)
+        }
+        .start()
+    }
     StreamQueries.awaitCounted(q)
     q
   }

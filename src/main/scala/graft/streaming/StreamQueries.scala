@@ -4,7 +4,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 import graft.expressions.GraftFunctions.dotq
 import graft.model.Tables
@@ -96,6 +98,12 @@ object StreamQueries {
   private lazy val qRoot: String = initRoot("q")
   private lazy val dedupRoot: String = initRoot("dedup")
 
+  /** The schema a parquet read of files written from `df` infers: `df`'s
+    * own, every field nullable. A stream over a source staged from `df`
+    * takes it, so no one-task inference job reads the staged files back. */
+  private[streaming] def stagedSchema(df: DataFrame): StructType =
+    SchemaBridge.nullable(df.schema)
+
   /** Start a streaming query with 8 state partitions instead of the
     * session's 32. A stateful stream pins one state-store instance (with
     * per-micro-batch snapshot + commit file I/O) per shuffle partition for
@@ -108,10 +116,19 @@ object StreamQueries {
     * restart inherits it from the checkpoint. The session conf is restored
     * immediately after start — the frozen-in value is read at query start
     * only, and later micro-batches of the SAME query keep using it. */
-  private[streaming] def withFewStatePartitions[A](s: SparkSession)(start: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try start finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  private[streaming] def withFewStatePartitions[A](s: SparkSession)(start: => A): A =
+    withStartConf(s, "spark.sql.shuffle.partitions", "8")(start)
+
+  /** Run `start` (a streaming query's `start()`) with one session conf set,
+    * then put the session's own setting back, also when `start` throws.
+    * `start()` clones the session, so the query keeps the value for its
+    * whole life while the session never sees it. */
+  private[streaming] def withStartConf[A](s: SparkSession, key: String,
+      value: String)(start: => A): A = {
+    val conf = s.sessionState.conf
+    val prior = if (conf.contains(key)) Some(conf.getConfString(key)) else None
+    conf.setConfString(key, value)
+    try start finally prior.fold(conf.unsetConf(key))(conf.setConfString(key, _))
   }
 
   def streamMicroBatch(s: SparkSession, dir: String): DataFrame = {
@@ -122,7 +139,7 @@ object StreamQueries {
       .select(col("event_id"), col("ts"), col("value"))
     timedStaging { events.write.parquet(src) }
 
-    val streamed = s.readStream.schema(s.read.parquet(src).schema).parquet(src)
+    val streamed = s.readStream.schema(stagedSchema(events)).parquet(src)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day").as("w"))
       .agg(count(lit(1)).as("n_events"),
@@ -200,7 +217,7 @@ object StreamQueries {
     }
     lastLatePlanted = planted
 
-    val streamed = s.readStream.schema(s.read.parquet(src).schema)
+    val streamed = s.readStream.schema(stagedSchema(events))
       .option("maxFilesPerTrigger", "1").parquet(src)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
@@ -259,7 +276,7 @@ object StreamQueries {
     timedStaging { events.repartition(8).write.parquet(src) }
 
     val streamed = s.readStream
-      .schema(s.read.parquet(src).schema)
+      .schema(stagedSchema(events))
       .option("maxFilesPerTrigger", "2") // the backlog drains 2 files/batch
       .parquet(src)
       .groupBy(col("event_type"))
@@ -319,7 +336,7 @@ object StreamQueries {
         .write.mode("append").parquet(src)
     }
 
-    val streamed = s.readStream.schema(s.read.parquet(src).schema)
+    val streamed = s.readStream.schema(stagedSchema(docs))
       .option("maxFilesPerTrigger", "1").parquet(src)
       .select(md5(col("text")).as("fp"), col("doc_id"))
       .groupBy(col("fp"))
@@ -368,7 +385,7 @@ object StreamQueries {
         when(conv(substring(md5(col("user_id").cast("string")), 1, 2), 16, 10)
           .cast("int") < 64, "vip").otherwise("std").as("tier"))
 
-    val streamed = s.readStream.schema(s.read.parquet(src).schema).parquet(src)
+    val streamed = s.readStream.schema(stagedSchema(events)).parquet(src)
       .join(dim, "user_id") // stream-static inner hash join, per micro-batch
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day").as("w"), col("tier"))
@@ -425,7 +442,7 @@ object StreamQueries {
     }
 
     def side(src: String, p: String) =
-      s.readStream.schema(s.read.parquet(src).schema).parquet(src)
+      s.readStream.schema(stagedSchema(events)).parquet(src)
         .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
           col("ts").as(s"${p}_ts"))
         .withWatermark(s"${p}_ts", "1 day")
@@ -478,7 +495,7 @@ object StreamQueries {
       .select(col("event_id"), col("user_id"), col("ts"))
     val maxTs = maxEventTs(events, "ts")
     val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 3L * 24 * 3600 * 1000)
-    def stage(sideName: String, parity: Int, sentId: Long): String = {
+    def stage(sideName: String, parity: Int, sentId: Long): (String, StructType) = {
       val p = s"$base/src$sideName"
       // ONE file per side, sentinel INCLUDED (r15; guide §1.2 — fewer
       // passes): outer-join emission rides state EXPIRY, which only needs
@@ -494,16 +511,16 @@ object StreamQueries {
       // sentinel (user_id = -1), and unmatched rows were only ever
       // emitted by the final eviction batch in both shapes.
       import s.implicits._
-      events.filter(col("event_id") % 2 === parity)
+      val staged = events.filter(col("event_id") % 2 === parity)
         .unionAll(Seq((sentId, -1L, sentinelTs)).toDF("event_id", "user_id", "ts"))
-        .coalesce(1).write.parquet(p)
-      p
+      staged.coalesce(1).write.parquet(p)
+      (p, stagedSchema(staged))
     }
     val srcA = timedStaging { stage("A", 0, -2L) }
     val srcB = timedStaging { stage("B", 1, -1L) }
-    def side(src: String, p: String) =
-      s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+    def side(staged: (String, StructType), p: String) =
+      s.readStream.schema(staged._2)
+        .option("maxFilesPerTrigger", "1").parquet(staged._1)
         .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
           col("ts").as(s"${p}_ts"))
         .withWatermark(s"${p}_ts", "1 day")
@@ -547,7 +564,7 @@ object StreamQueries {
         .coalesce(1).write.parquet(s"$base/srcB")
     }
     def side(src: String, p: String) =
-      s.readStream.schema(s.read.parquet(src).schema).parquet(src)
+      s.readStream.schema(stagedSchema(events)).parquet(src)
         .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
           col("ts").as(s"${p}_ts"))
         .withWatermark(s"${p}_ts", "1 day")
@@ -591,21 +608,21 @@ object StreamQueries {
       .select(col("event_id"), col("user_id"), col("ts"))
     val maxTs = maxEventTs(events, "ts")
     val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 3L * 24 * 3600 * 1000)
-    def stage(sideName: String, parity: Int, sentId: Long): String = {
+    def stage(sideName: String, parity: Int, sentId: Long): (String, StructType) = {
       val p = s"$base/src$sideName"
       // sentinel rides in the single real-slice file — 2 micro-batches
       // instead of 3; see the stream_outer_join staging note (r15)
       import s.implicits._
-      events.filter(col("event_id") % 2 === parity)
+      val staged = events.filter(col("event_id") % 2 === parity)
         .unionAll(Seq((sentId, -1L, sentinelTs)).toDF("event_id", "user_id", "ts"))
-        .coalesce(1).write.parquet(p)
-      p
+      staged.coalesce(1).write.parquet(p)
+      (p, stagedSchema(staged))
     }
     val srcA = timedStaging { stage("A", 0, -2L) }
     val srcB = timedStaging { stage("B", 1, -1L) }
-    def side(src: String, p: String) =
-      s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+    def side(staged: (String, StructType), p: String) =
+      s.readStream.schema(staged._2)
+        .option("maxFilesPerTrigger", "1").parquet(staged._1)
         .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
           col("ts").as(s"${p}_ts"))
         .withWatermark(s"${p}_ts", "1 day")
@@ -666,7 +683,7 @@ object StreamQueries {
       Seq((-1L, new java.sql.Timestamp(maxTs.getTime + 3L * 24 * 3600 * 1000), 0.0))
         .toDF("user_id", "ts", "value").write.mode("append").parquet(src)
     }
-    val streamed = s.readStream.schema(s.read.parquet(src).schema)
+    val streamed = s.readStream.schema(stagedSchema(events))
       .option("maxFilesPerTrigger", "1").parquet(src)
       .withWatermark("ts", "1 day")
       .groupBy(session_window(col("ts"), "2 hours"), col("user_id"))
@@ -741,7 +758,7 @@ object StreamQueries {
       events.coalesce(1).write.mode("append").parquet(src) // the dup wave
     }
 
-    val streamed = s.readStream.schema(s.read.parquet(src).schema)
+    val streamed = s.readStream.schema(stagedSchema(events))
       .option("maxFilesPerTrigger", "1").parquet(src)
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("event_id")
@@ -806,7 +823,7 @@ object StreamQueries {
     }
 
     val q = withFewStatePartitions(s) {
-      s.readStream.schema(s.read.parquet(s"$base/src").schema)
+      s.readStream.schema(stagedSchema(changes))
         .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
         .writeStream
         .option("checkpointLocation", s"$base/ckpt")
@@ -890,7 +907,7 @@ object StreamQueries {
     val audits =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
     val q = withFewStatePartitions(s) {
-      s.readStream.schema(s.read.parquet(s"$base/src").schema)
+      s.readStream.schema(stagedSchema(good))
         .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
         .writeStream
         .option("checkpointLocation", s"$base/ckpt")
@@ -1123,7 +1140,7 @@ object StreamQueries {
     // the quantizer trains OFFLINE; ingest only assigns against it
     val cent = graft.llm.Similarity.coarseCentroids(s, dir).localCheckpoint()
     val q = withFewStatePartitions(s) {
-      s.readStream.schema(s.read.parquet(s"$base/src").schema)
+      s.readStream.schema(stagedSchema(emb))
         .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
         .writeStream
         .option("checkpointLocation", s"$base/ckpt")
@@ -1231,13 +1248,11 @@ object StreamQueries {
     val id = runId.incrementAndGet()
     val base = s"$qRoot/$id"
     val src = s"$base/src"
-    timedStaging {
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("ts"), col("value"))
-        .write.parquet(src)
-    }
+    val events = Tables.load(s, dir, "events")
+      .select(col("event_id"), col("ts"), col("value"))
+    timedStaging { events.write.parquet(src) }
 
-    val streamed = s.readStream.schema(s.read.parquet(src).schema).parquet(src)
+    val streamed = s.readStream.schema(stagedSchema(events)).parquet(src)
       .withWatermark("ts", "2 days")
       .groupBy(window(col("ts"), "2 days", "1 day").as("w"))
       .agg(count(lit(1)).as("n_events"),
@@ -1307,7 +1322,7 @@ object StreamQueries {
 
     val ok = col("value") >= 0 && col("event_type").isNotNull
     val q = withFewStatePartitions(s) {
-      s.readStream.schema(s.read.parquet(s"$base/src").schema)
+      s.readStream.schema(stagedSchema(staged))
         .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
         .writeStream
         .option("checkpointLocation", s"$base/ckpt")
@@ -1323,7 +1338,8 @@ object StreamQueries {
     }
     awaitCounted(q)
     def sideAgg(sub: String, label: String): DataFrame =
-      s.read.option("recursiveFileLookup", "true").parquet(s"$base/$sub")
+      s.read.option("recursiveFileLookup", "true").schema(stagedSchema(staged))
+        .parquet(s"$base/$sub")
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value").cast("decimal(18,4)")), 2).cast("double")
             .as("total_value"),

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.spark.sql.{types, DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, length, lit, max, md5, min, sum, when, bin}
 
 /** Minimal copy-on-write table format with a commit log — the transactional
@@ -651,7 +652,7 @@ object VersionedTable {
     else scan
       .select(col("*"), col("_metadata.file_path").as("__file"),
         col("_metadata.row_index").as("__pos"))
-      .join(broadcast(s.read.parquet(dvs: _*)), Seq("__file", "__pos"),
+      .join(broadcast(readFiles(s, dvs)), Seq("__file", "__pos"),
         "left_anti")
       .drop("__file", "__pos")
   }
@@ -930,7 +931,7 @@ object VersionedTable {
   private def applyDeletes(s: SparkSession, root: String, v: Int,
       df: DataFrame): DataFrame =
     deleteFiles(root, v).foldLeft(df) { case (acc, (c, files)) =>
-      val keys = s.read.parquet(files: _*).select(col(c)).distinct()
+      val keys = readFiles(s, files).select(col(c)).distinct()
       acc.join(broadcast(keys), Seq(c), "left_anti")
     }
 
@@ -948,9 +949,17 @@ object VersionedTable {
         IllegalStateException(s"version $v at $root has no files and no schema"))
       return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-    applyDeletes(s, root, v,
-      applyDvs(s, root, v, s.read.parquet(files: _*)))
+    applyDeletes(s, root, v, applyDvs(s, root, v, readFiles(s, files)))
   }
+
+  /** `s.read.parquet(files: _*)` without its one-task schema-inference
+    * job: the schema that inference would pick (the first file's footer,
+    * with schema merging off) is read on the driver and passed in. The
+    * manifest's `S` record is not that schema: after `commitRename` it holds
+    * logical names, after ADD COLUMN it is wider than the older files. */
+  private def readFiles(s: SparkSession, files: Seq[String]): DataFrame =
+    if (s.sessionState.conf.isParquetSchemaMergingEnabled) s.read.parquet(files: _*)
+    else s.read.schema(SchemaBridge.parquetFooterSchema(s, files)).parquet(files: _*)
 
   /** Publish a SCHEMA-ONLY version — `CREATE TABLE` before any load: the
     * manifest carries just the `S` record (and its `T` commit instant),

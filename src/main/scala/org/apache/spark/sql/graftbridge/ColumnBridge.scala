@@ -9,10 +9,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4's public `Column` wraps a ColumnNode, not an Expression, so
   * planting a raw Catalyst expression (e.g. the internal codegen
   * `BloomFilterMightContain`, or the graft expressions behind the typed
-  * `graft.expressions.GraftFunctions` columns and the tokenizers) into a
-  * DataFrame needs the classic converter. This is the ONLY place the
-  * engine reaches into Spark's private API surface, and only for the two
-  * total functions below.
+  * `graft.expressions.GraftFunctions` columns, the tokenizers and
+  * Flatten's `ColumnPick`) into a DataFrame needs the classic converter.
+  * This package (this object and `SchemaBridge`) is the ONLY place the
+  * engine reaches into Spark's private API surface; here, only for the
+  * two total functions below.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -1,16 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions.col
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
 import graft.model.Tables
 
@@ -130,29 +126,6 @@ class ArtifactsSpec extends SparkSpec {
 
   private def rowsOf(df: DataFrame): Seq[(Int, String)] =
     df.collect().map(r => (r.getInt(0), r.getString(1))).toSeq.sortBy(_._1)
-
-  /** Descriptions of the jobs `work` submits, the listener bus drained. */
-  private def jobsOf(work: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        seen.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription("probe")
-      work
-      sc.setJobDescription("marker")
-      spark.range(1).count()
-      eventually(timeout(30.seconds)) { assert(seen.contains("marker")) }
-      seen.asScala.toSeq.filter(_ == "probe")
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.setJobDescription(null)
-    }
-  }
 
   test("a second read of an unchanged path submits no Spark job") {
     val path = s"${table(1 -> "a", 2 -> "b")}/t.parquet"

@@ -103,8 +103,120 @@ class FlattenSpec extends SparkSpec {
   }
 
   test("flatten plan is shuffle-free (explode + projection only)") {
-    val plan = Flatten.subitems(spark).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"flatten must not shuffle:\n$plan")
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec,
+      SparkPlan, WholeStageCodegenExec}
+    def stageNodes(w: WholeStageCodegenExec): Seq[SparkPlan] = {
+      def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: InputAdapter => Nil
+        case other => other +: other.children.flatMap(walk)
+      }
+      walk(w.child)
+    }
+    val tables = Seq("projects" -> Flatten.projects(spark),
+      "subitems" -> Flatten.subitems(spark), "personnel" -> Flatten.personnel(spark),
+      "travel" -> Flatten.travel(spark), "suppliers" -> Flatten.suppliers(spark))
+    for ((name, df) <- tables) {
+      val plan = df.queryExecution.executedPlan
+      assert(!plan.toString.contains("Exchange"), s"$name must not shuffle:\n$plan")
+      val fallbacks = plan.collect { case n => n.expressions }.flatten
+        .flatMap(_.collect { case e: CodegenFallback => e.prettyName })
+      assert(fallbacks.isEmpty, s"$name runs $fallbacks outside codegen:\n$plan")
+      val stages = plan.collect { case w: WholeStageCodegenExec => stageNodes(w) }
+      val projects = plan.collect { case p: ProjectExec => p }
+      val picks = projects.filter(_.projectList.exists(_.exists(_.isInstanceOf[
+        graft.expressions.ColumnPick])))
+      assert(picks.nonEmpty, s"$name has no column pick:\n$plan")
+      projects.foreach(p => assert(stages.exists(_.contains(p)),
+        s"$name: a projection sits outside whole-stage codegen:\n$plan"))
+      picks.foreach(p => assert(stages.exists(st => st.contains(p) &&
+        st.exists(_.isInstanceOf[GenerateExec])),
+        s"$name: the picks do not share the explode's codegen stage:\n$plan"))
+    }
+  }
+
+  test("the native column pick equals the filter-lambda form, codegen and interpreted") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.types._
+    import graft.expressions.ColumnPick
+    // The form Flatten used before the native pick, kept as the reference.
+    def lambdaPick(cvs: Column, path: Seq[String], key: String, field: String,
+        firstWins: Boolean, grammar: Option[String]): Column =
+      try_element_at(filter(cvs, c => {
+        val text = c.getField("text")
+        val hit = path.foldLeft(c)(_.getField(_)) === key && text.isNotNull &&
+          length(text) > 0
+        grammar.fold(hit)(g => hit && text.rlike(g))
+      }), lit(if (firstWins) 1 else -1)).getField(field)
+    def nativePick(cvs: Column, path: Seq[String], key: String, field: String,
+        firstWins: Boolean, grammar: Option[String]): Column =
+      ColumnBridge.column(ColumnPick(ColumnBridge.expression(cvs), path, key,
+        field, firstWins, grammar))
+    val g = Some(Flatten.NumberGrammar)
+    val picks = Seq(
+      (Seq("id"), "a", "text", true, None), (Seq("id"), "a", "value", true, None),
+      (Seq("id"), "a", "text", false, None), (Seq("id"), "n", "text", false, g),
+      (Seq("column", "type"), "numbers", "text", false, g),
+      (Seq("column", "type"), "numbers", "text", false, None),
+      (Seq("column", "type"), "status", "text", true, None),
+      (Seq("column", "type"), "status", "value", false, None))
+
+    val cv = StructType(Seq(StructField("id", StringType),
+      StructField("text", StringType), StructField("value", StringType),
+      StructField("column", StructType(Seq(StructField("type", StringType))))))
+    def e(id: String, text: String, value: String, tpe: String): Row =
+      Row(id, text, value, Row(tpe))
+    def num(id: String, text: String) = e(id, text, s"v:$text", "numbers")
+    val cases: Seq[(String, Seq[Row])] = Seq(
+      "null array" -> null,
+      "empty array" -> Seq(),
+      "null element" -> Seq(null, e("a", "x", "v1", "status"), null),
+      "null id or column" -> Seq(e(null, "t0", "v0", "status"),
+        Row("a", "t1", "v1", null), e("a", "t2", "v2", null), e("n", "3", "v3", "numbers"),
+        e("a", "t4", "v4", "status")),
+      "empty and null text" -> Seq(e("a", "", "v0", "status"),
+        e("a", null, "vn", "status"), e("a", "hit", "v1", "status"), e("a", "", "v9", "status")),
+      "trailing N/A after a number" -> Seq(num("n", "12.5"), num("n", "N/A")),
+      "1_000" -> Seq(num("n", "7"), num("n", "1_000")),
+      "inf" -> Seq(num("n", "7"), num("n", "inf")),
+      "5 and a newline" -> Seq(num("n", "7"), num("n", "5\n")),
+      "first wins vs last wins" -> Seq(e("a", "first", "v1", "status"),
+        e("a", "second", "v2", "status"), e("b", "other", "v3", "status")),
+      "null value" -> Seq(e("a", "t", null, "status"), e("a", "u", "v2", "status"),
+        e("a", "w", null, "status")))
+    val schema = StructType(Seq(StructField("name", StringType),
+      StructField("cvs", ArrayType(cv))))
+    val dir = java.nio.file.Files.createTempDirectory("graft_pick_spec").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(
+        cases.map { case (n, cvs) => Row(n, cvs) }, 2), schema)
+      .write.mode("overwrite").parquet(dir)
+    val table = spark.read.parquet(dir)
+    def rows(pick: (Column, Seq[String], String, String, Boolean, Option[String]) => Column) =
+      table.select(col("name") +: picks.map { case (path, key, field, first, gr) =>
+        pick(col("cvs"), path, key, field, first, gr) }: _*)
+        .collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    def under[A](factory: String, wholeStage: Boolean)(body: => A): A = {
+      val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+      val prior = keys.map(k => k -> spark.conf.getOption(k))
+      spark.conf.set(keys(0), factory)
+      spark.conf.set(keys(1), wholeStage.toString)
+      try body finally prior.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val want = under("NO_CODEGEN", wholeStage = false)(rows(lambdaPick))
+    assert(want.size == cases.size)
+    for ((factory, ws) <- Seq(("CODEGEN_ONLY", true), ("NO_CODEGEN", false))) {
+      val got = under(factory, ws)(rows(nativePick))
+      want.zip(got).foreach { case (w, gt) =>
+        assert(gt == w, s"$factory: case ${w.head} (picks $picks)") }
+    }
+    // pinned: rlike is find() with Java's `$`, which matches before a final
+    // newline, so "5\n" is accepted; "1_000" and "inf" are not.
+    val byName = want.map(r => r.head -> r).toMap
+    assert(byName("5 and a newline")(4) == "5\n")
+    assert(byName("1_000")(4) == "7" && byName("inf")(4) == "7")
+    assert(byName("trailing N/A after a number")(5) == "12.5")
   }
 
   test("a board reads as ceil(bytes / maxPartitionBytes) partitions, rows unchanged") {

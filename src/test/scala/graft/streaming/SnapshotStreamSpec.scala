@@ -72,4 +72,66 @@ class SnapshotStreamSpec extends SparkSpec {
     assert(!alerts.isEmpty, "3-row snapshot must trip the low_rows alert")
     assert(alerts.peek().startsWith("low_rows:"))
   }
+
+  test("a daily run is one micro-batch: same alerts as with no-data batches, bounded state") {
+    import org.apache.spark.sql.streaming.Trigger
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val base = s"${sys.props("java.io.tmpdir")}/graft_stream_spec3"
+    Sinks.deleteDir(base)
+    val all = Flatten.personnel(spark)
+    val dates = all.select(col("extraction_date")).distinct().collect()
+      .map(_.getDate(0)).sortBy(_.getTime)
+    def day(i: Int) = all.filter(col("extraction_date") === dates(i))
+    // run 3 re-appends day 1 (a cron retry) together with day 2
+    val appends = Seq(Seq(0), Seq(1), Seq(1, 2))
+    def stream(hist: String) = SnapshotStream.dailyAggregates(
+      SnapshotStream.snapshotStream(spark, hist, spark.read.parquet(hist).schema), "amount")
+    // alert rule of runAvailableNow, over every emitted window
+    val minRows = 1000L
+    def alertsOf(batch: org.apache.spark.sql.DataFrame): Seq[String] =
+      batch.filter(col("n_rows") < minRows).collect()
+        .map(r => s"low_rows:${r.getAs[java.sql.Date]("snapshot_day")}:${r.getAs[Long]("n_rows")}")
+        .toSeq.sorted
+
+    val (oneHist, refHist) = (s"$base/one/hist", s"$base/ref/hist")
+    val one = appends.map { days =>
+      days.foreach(d => Sinks.appendHistorical(day(d), oneHist))
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val before = spark.conf.getOption(key)
+      val q = SnapshotStream.runAvailableNow(stream(oneHist), s"$base/one/ckpt", minRows)(
+        as => as.foreach(seen.add))
+      assert(spark.conf.getOption(key) == before, "the session's flag changed")
+      assert(q.recentProgress.length == 1, s"batches: ${q.recentProgress.length}")
+      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+      assert(stateRows <= 3, s"state holds $stateRows windows")
+      seen.toArray.map(_.toString).toSeq.sorted
+    }
+    assert(spark.conf.getOption(key).contains("true"), "no-data batches are on by default")
+    val ref = appends.map { days =>
+      days.foreach(d => Sinks.appendHistorical(day(d), refHist))
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val q = stream(refHist).writeStream.outputMode("update")
+        .option("checkpointLocation", s"$base/ref/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          alertsOf(b).foreach(seen.add); () }
+        .start()
+      q.awaitTermination()
+      assert(q.recentProgress.length == 2, "data batch + no-data batch")
+      seen.toArray.map(_.toString).toSeq.sorted
+    }
+    assert(one == ref, s"alerts differ:\n$one\nvs\n$ref")
+    assert(one.forall(_.nonEmpty) && one(2).size == 2, s"every run alerts: $one")
+
+    // an explicit setting survives, also when start() throws
+    spark.conf.set(key, "true")
+    try {
+      val notADir = s"$base/ckpt_is_a_file"
+      java.nio.file.Files.write(java.nio.file.Paths.get(notADir), Array[Byte](1))
+      intercept[Exception] {
+        SnapshotStream.runAvailableNow(stream(oneHist), s"$notADir/ckpt", minRows)(_ => ())
+      }
+      assert(spark.conf.get(key) == "true")
+    } finally spark.conf.unset(key)
+  }
 }

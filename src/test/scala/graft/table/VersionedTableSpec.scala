@@ -1165,4 +1165,30 @@ class VersionedTableSpec extends SparkSpec {
     // and the refusal left main untouched
     assert(VersionedTable.latestVersion(main) == 3)
   }
+
+  test("readVersion takes the schema inference would pick and submits no job before its action") {
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val root = freshRoot()
+    val v1 = VersionedTable.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), root)
+    val v2 = VersionedTable.commitAppend(Seq((3L, "c")).toDF("k", "s"), root)
+    val v3 = VersionedTable.commitAddColumn(root,
+      org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.DoubleType))
+    val v4 = VersionedTable.commitAppend(Seq((4L, "d", 1.5)).toDF("k", "s", "x"), root)
+    val v5 = VersionedTable.commitRename(root, Map("s" -> "name"))
+    for ((v, what) <- Seq(v1 -> "commit", v2 -> "commitAppend", v3 -> "ADD COLUMN",
+        v4 -> "append after ADD COLUMN", v5 -> "commitRename")) {
+      var got: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf { got = VersionedTable.readVersion(spark, root, v) }.isEmpty,
+        s"$what: readVersion submitted a job before its action")
+      val want = spark.read.parquet(VersionedTable.manifest(root, v): _*)
+      assert(got.schema == want.schema, s"$what: ${got.schema} vs ${want.schema}")
+      assert(rows(got) == rows(want), s"$what: rows differ")
+    }
+    val v6 = VersionedTable.commitDeletes(Seq(2L).toDF("k"), root, "k")
+    var deleted: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { deleted = VersionedTable.readVersion(spark, root, v6) }.isEmpty,
+      "a version with delete records submitted a job before its action")
+    assert(deleted.select(col("k")).as[Long].collect().sorted.toSeq == Seq(1L, 3L, 4L))
+  }
 }

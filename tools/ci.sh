@@ -49,15 +49,27 @@ fi
 # `Artifacts.read` serves each (session, path) frame while its fingerprint
 # holds, so a warm key re-runs no schema-inference job. A direct read of
 # an artifact root, or in the table loader, is a second loader growing
-# back. Streaming sources that take their schema from a per-run staged
-# fixture (`readStream.schema(...)`) are not artifact roots.
+# back. (Streaming sources take the schema of the frame they staged,
+# `StreamQueries.stagedSchema`, and read nothing back.)
 if grep -rnE '\.read\.parquet\(s"\$(root|base)/' src/main/scala --include='*.scala' \
-    | grep -v '^src/main/scala/graft/Artifacts\.scala:' | grep -v 'readStream\.schema('; then
+    | grep -v '^src/main/scala/graft/Artifacts\.scala:'; then
   echo "LINT FAIL: parquet read of a derived-artifact root outside graft/Artifacts.scala (read it through Artifacts.read)" >&2
   exit 1
 fi
 if grep -n '\.read\.parquet' src/main/scala/graft/model/Tables.scala; then
   echo "LINT FAIL: .read.parquet in graft/model/Tables.scala (load the table through Artifacts.read)" >&2
+  exit 1
+fi
+# No Column-API higher-order lambda in src/main: `filter`, `transform`,
+# `exists`, `forall`, `aggregate` and `zip_with` over a Scala lambda are
+# CodegenFallback expressions, interpreted per element, and they split
+# the projection around them out of whole-stage codegen. A native
+# expression (graft/expressions, planted through ColumnBridge) keeps the
+# stage whole. Comment lines are skipped; collection methods
+# (`xs.filter(x => …)`) have no array argument before the lambda.
+if grep -rnE '(^|[^.[:alnum:]_]|functions\.)(filter|transform|exists|forall|aggregate|zip_with)\(.*,[[:space:]]*\(?[[:alnum:]_]+([[:space:]]*,[[:space:]]*[[:alnum:]_]+)?\)?[[:space:]]*=>' \
+    src/main/scala --include='*.scala' | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//)'; then
+  echo "LINT FAIL: Column-API higher-order lambda in src/main (write a native expression in graft/expressions)" >&2
   exit 1
 fi
 # One session recipe: every SparkSession in src/main is built by
